@@ -69,11 +69,14 @@ def _purge_partition_dirs(spark, path: str, pcols: list[str],
     path is exercised by the local pytests and production stores.
     Returns the number of directories actually removed.
     """
+    from .sink import NULL_PARTITION
+
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     purged = 0
     for t in parts:
-        sub = "/".join(f"{c}={v}" for c, v in zip(pcols, t))
+        sub = "/".join(f"{c}={NULL_PARTITION if v is None else v}"
+                       for c, v in zip(pcols, t))
         p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + sub)
         fs = p.getFileSystem(hconf)
         # recursive delete; False return = already absent (benign race)
@@ -117,7 +120,7 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
 
     Returns ``{"affected_partitions": n, "rewritten": n, "purged": n}``.
     """
-    from .sink import PARTITION_COLS, with_time_partitions
+    from .sink import PARTITION_COLS, partition_filter, with_time_partitions
 
     existing = spark.read.format(fmt).load(path)
     upd = with_time_partitions(updates, ts_col)
@@ -133,16 +136,11 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
     if not affected_set:
         return {"affected_partitions": 0, "rewritten": 0, "purged": 0}
 
-    # OR-of-conjunctions over literal partition values: exactly the form
-    # PruneFileSourcePartitions folds into a directory prune, so the
-    # read-back scan opens only the affected partitions' files.
-    from functools import reduce
-    part_pred = reduce(
-        Column.__or__,
-        [reduce(Column.__and__,
-                [F.col(c) == F.lit(v) for c, v in zip(pcols, t)])
-         for t in sorted(affected_set)])
-    slice_ = existing.filter(part_pred)
+    # one partition-only InSet over the affected values: the read-back
+    # scan opens only the affected partitions' files (the NULL-hour
+    # partition included)
+    slice_ = existing.filter(
+        partition_filter(existing, pcols, affected_set))
     # localCheckpoint before the overwrite: Spark (rightly) refuses to
     # overwrite a path its write plan still reads from; checkpointing
     # materializes the merged slice (bounded by the affected partitions,
@@ -170,7 +168,7 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
     # through the Hadoop FS API so object stores purge too.
     written = {tuple(r) for r in merged.select(*pcols).distinct().collect()}
     purged = _purge_partition_dirs(spark, path, pcols,
-                                   sorted(affected_set - written))
+                                   affected_set - written)
     return {"affected_partitions": len(affected_set),
             "rewritten": len(written & affected_set), "purged": purged}
 
@@ -188,9 +186,9 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
     1. affected = partitions holding a matched key (column-pruned
        LEFT SEMI scan of (keys, partition cols) against the broadcast
        key set — deletion requests are small by nature);
-    2. those partitions alone are read back (the same OR-of-literal-
-       conjunctions predicate PruneFileSourcePartitions folds into a
-       directory prune) and anti-joined against the keys;
+    2. those partitions alone are read back (the same
+       :func:`~.sink.partition_filter` directory prune) and anti-joined
+       against the keys;
     3. survivors land via dynamic partition overwrite; a partition
        whose every row matched is purged explicitly (dynamic overwrite
        skips empty outputs — the merge operator's stale-hour rule).
@@ -199,9 +197,7 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
     "deleted_rows"}`` — the deletion-audit record a compliance log
     wants.
     """
-    from functools import reduce
-
-    from .sink import PARTITION_COLS
+    from .sink import PARTITION_COLS, partition_filter
 
     existing = spark.read.format(fmt).load(path)
     del_keys = keys_df.select(*keys).distinct()
@@ -214,12 +210,9 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
         return {"affected_partitions": 0, "rewritten": 0, "purged": 0,
                 "deleted_rows": 0}
 
-    part_pred = reduce(
-        Column.__or__,
-        [reduce(Column.__and__,
-                [F.col(c) == F.lit(v) for c, v in zip(pcols, t)])
-         for t in sorted(affected_set)])
-    slice_ = existing.filter(part_pred).localCheckpoint(eager=True)
+    slice_ = (existing.filter(partition_filter(existing, pcols,
+                                               affected_set))
+              .localCheckpoint(eager=True))
     kept = (slice_.join(F.broadcast(del_keys), keys, "left_anti")
             .localCheckpoint(eager=True))
     deleted = slice_.count() - kept.count()
@@ -237,7 +230,7 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
 
     written = {tuple(r) for r in kept.select(*pcols).distinct().collect()}
     purged = _purge_partition_dirs(spark, path, pcols,
-                                   sorted(affected_set - written))
+                                   affected_set - written)
     return {"affected_partitions": len(affected_set),
             "rewritten": len(written & affected_set),
             "purged": purged, "deleted_rows": deleted}

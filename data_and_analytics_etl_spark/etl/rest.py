@@ -6,9 +6,11 @@ Spark-native re-expression of the reference's pull/push engines
 - Source: the paginated fetch runs driver-side (the API itself is the
   serial bottleneck, exactly as in the reference) but lands directly in
   a DataFrame; server-side time-window/order/limit params mirror the
-  reference's pushdown (:180-200). Transport is injectable so tests and
-  air-gapped runs use a fake; a real deployment passes a thin
-  requests-based callable.
+  reference's pushdown (:180-200). The page strings are unpickled in the
+  JVM and parsed by the JVM JSON reader, so neither schema inference nor
+  any later action over the landed frame starts a Python worker.
+  Transport is injectable so tests and air-gapped runs use a fake; a
+  real deployment passes a thin requests-based callable.
 - Sink: one HTTP call per record, executed per-partition via
   ``foreachPartition`` so N executors push concurrently (the reference
   loops serially in one Lambda, :319-325); per-partition error budget
@@ -54,8 +56,13 @@ def rest_source(spark: SparkSession, transport: Transport,
             break
     rdd = spark.sparkContext.parallelize(pages or ["{}"], numSlices=max(
         1, len(pages) // 10_000 + 1))
+    # ``reader.json(rdd)`` would re-encode the strings in a Python-worker
+    # stage on every job over the frame (inference, then each action);
+    # SerDeUtil unpickles the parallelized batches in the JVM instead.
+    strings = spark._jvm.org.apache.spark.api.python.SerDeUtil.pythonToJava(
+        rdd._jrdd, True)
     reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.json(rdd)
+    df = DataFrame(reader._jreader.json(strings), spark)
     return df.limit(0) if not pages else df
 
 

@@ -31,6 +31,7 @@ Usage:
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
@@ -38,6 +39,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     SimpleDataSourceStreamReader,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 # Module-level import, not runtime-relative: every use site below may run
 # in a Python planner/executor worker where the repo package is NOT
@@ -265,13 +268,15 @@ class RestWriter(DataSourceWriter):
 
     def commit(self, messages) -> None:
         total = sum(m.count for m in messages if m is not None)
-        print(f"rest write committed: {total} records pushed")
+        log.info("rest write committed: %d records pushed", total,
+                 extra={"pushed": total})
 
     def abort(self, messages) -> None:
         done = sum(m.count for m in messages if m is not None)
-        print(f"rest write aborted after {done} pushed records — "
-              "per-record push has no rollback (at-least-once, "
-              "dedup downstream)")
+        log.warning("rest write aborted after %d pushed records — "
+                    "per-record push has no rollback (at-least-once, "
+                    "dedup downstream)", done,
+                    extra={"pushed": done, "aborted": True})
 
 
 class RestStreamReader(SimpleDataSourceStreamReader):

@@ -24,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 PARTITION_COLS = ("year", "month", "day", "hour")
+#: directory value Hive writes for a NULL partition value
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
@@ -34,6 +36,37 @@ def with_time_partitions(df: DataFrame, ts_col: str) -> DataFrame:
             .withColumn("month", F.month(t))
             .withColumn("day", F.dayofmonth(t))
             .withColumn("hour", F.hour(t)))
+
+
+def partition_filter(df: DataFrame, pcols, parts) -> Column:
+    """Select the partitions ``parts`` (value tuples in ``pcols`` order)
+    of a Hive-layout read ``df``: ``struct(pcols) IN (struct literals)``.
+
+    One predicate over the partition columns only, so
+    PruneFileSourcePartitions still turns it into a directory prune, and
+    past ``spark.sql.optimizer.inSetConversionThreshold`` values the
+    optimizer makes it a single ``INSET``. Each literal is cast to its
+    partition column's type, which also lets a NULL value (the
+    :data:`NULL_PARTITION` hour of a NULL timestamp) match: struct
+    equality compares NULL fields as equal, while ``col == NULL`` never
+    holds.
+
+    The predicate is handed to the JVM as one SQL expression. Built
+    from Column calls it costs several Py4J round trips per value, on a
+    4-core host about 0.5 s for 48 hours, as much as the OR of
+    per-partition conjunctions it replaces; the SQL text costs one.
+    """
+    def quote(v) -> str:
+        return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    structs = ", ".join(
+        "named_struct(" + ", ".join(
+            f"{quote(c)}, CAST({'NULL' if v is None else quote(v)} "
+            f"AS {types[c]})" for c, v in zip(pcols, t)) + ")"
+        for t in parts)
+    cols = ", ".join("`" + c.replace("`", "``") + "`" for c in pcols)
+    return F.expr(f"struct({cols}) IN ({structs})")
 
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str,
@@ -135,9 +168,9 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     1. per-partition file counts come from a DIRECTORY LISTING (no data
        scan, the vacuum_partitions rule); a partition is fragmented
        when it holds ≥ ``min_files`` data files;
-    2. only fragmented partitions are read back — the filter is an
-       OR-of-conjunctions over literal partition values, exactly the
-       form PruneFileSourcePartitions folds into a directory prune;
+    2. only fragmented partitions are read back — the filter is one
+       :func:`partition_filter` over their values, which
+       PruneFileSourcePartitions folds into a directory prune;
     3. the slice is repartitioned BY the partition columns (without
        this every write task holding rows of an hour emits its own
        file there, reproducing the fragmentation) and rewritten via
@@ -150,38 +183,41 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     "files_after"}`` (file counts over the fragmented set only).
     """
     import os as _os
-    from functools import reduce as _reduce
+    from urllib.parse import unquote
+
+    def value(v):
+        if v == NULL_PARTITION:
+            return None
+        # Hive escapes characters such as ':' and '=' as %XX in the
+        # directory name
+        v = unquote(v)
+        return int(v) if v.lstrip("-").isdigit() else v
 
     # 1. listing-only fragmentation census over the Hive layout
-    per_part: dict[tuple, int] = {}
+    per_part: dict[str, int] = {}
     for root, dirs, files in _os.walk(path):
         data = [f for f in files
                 if f.endswith(f".{fmt}") and not f.startswith(("_", "."))]
         if not data:
             continue
         rel = _os.path.relpath(root, path).replace(_os.sep, "/")
-        segs = [s.split("=", 1) for s in rel.split("/") if "=" in s]
-        key = tuple((c, int(v) if v.lstrip("-").isdigit() else v)
-                    for c, v in segs)
-        per_part[key] = per_part.get(key, 0) + len(data)
-    fragmented = {k: n for k, n in per_part.items()
-                  if k and n >= min_files}
+        per_part[rel] = per_part.get(rel, 0) + len(data)
+    fragmented = {rel: n for rel, n in per_part.items()
+                  if "=" in rel and n >= min_files}
     if not fragmented:
         return {"partitions_total": len(per_part), "compacted": 0,
                 "files_before": 0, "files_after": 0}
 
     # 2. partition-pruned read of the fragmented slice only
     df = spark.read.format(fmt).load(path)
-    part_pred = _reduce(
-        Column.__or__,
-        [_reduce(Column.__and__,
-                 [F.col(c) == F.lit(v) for c, v in key])
-         for key in sorted(fragmented)])
-    pcols = [c for c, _ in next(iter(fragmented))]
+    segs = [[s.split("=", 1) for s in rel.split("/") if "=" in s]
+            for rel in fragmented]
+    pcols = [c for c, _ in segs[0]]
+    parts = [tuple(value(v) for _, v in seg) for seg in segs]
     # localCheckpoint: Spark refuses to overwrite a path its write plan
     # still reads; materializing the (fragmentation-bounded) slice
     # truncates lineage back to the source files (merge.py rule).
-    slice_ = (df.filter(part_pred)
+    slice_ = (df.filter(partition_filter(df, pcols, parts))
               .repartition(*[F.col(c) for c in pcols])
               .localCheckpoint(eager=True))
 
@@ -197,8 +233,8 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     after = 0
-    for key in fragmented:
-        d = _os.path.join(path, *(f"{c}={v}" for c, v in key))
+    for rel in fragmented:
+        d = _os.path.join(path, rel)
         after += sum(1 for f in _os.listdir(d)
                      if f.endswith(f".{fmt}") and not f.startswith(("_",
                                                                     ".")))

@@ -445,55 +445,60 @@ def dedup_clusters(pairs: DataFrame, vertices: DataFrame,
     # every round, and the checkpoint is what truncates the growing
     # lineage.
     edges = edges.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
-    labels = labels.localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (edges.join(labels, edges.dst == labels.vid)
-                        .groupBy("src")
-                        .agg(F.min("label").alias("nmin")))
-        prop = (labels.join(neighbor_min,
-                            labels.vid == neighbor_min.src, "left")
-                .select(F.col("vid"),
-                        F.col("label").alias("__old"),
-                        F.least(F.col("label"),
-                                F.coalesce(F.col("nmin"), F.col("label")))
-                        .alias("__mid")))
-        # pointer doubling: look up the label OF the new label (labels
-        # are always vertex ids, so the self-join always resolves; left
-        # join + coalesce guards ids outside the vertex universe)
-        ref = prop.select(F.col("vid").alias("__rvid"),
-                          F.col("__mid").alias("__rlab"))
-        updated = (prop.join(ref, prop.__mid == ref.__rvid, "left")
-                   .select(F.col("vid"),
-                           F.least(F.col("__mid"),
-                                   F.coalesce(F.col("__rlab"),
-                                              F.col("__mid")))
-                           .alias("label"),
-                           F.col("__old")))
-        updated = updated.withColumn(
-            "__changed", F.col("label") != F.col("__old")).drop("__old")
-        # materialize once per round: breaks the exponentially growing
-        # lineage AND serves the convergence check from the same pass.
-        # The changed-count rides the checkpoint job itself via
-        # observe() (r13 optimization): the eager localCheckpoint fires
-        # the CollectMetrics node, so obs.get returns without a second
-        # action — one driver round trip per round instead of two, and
-        # at cluster scale one fewer full read of the label table.
-        obs = Observation()
-        updated = updated.observe(
-            obs, F.sum(F.col("__changed").cast("long")).alias("n"))
-        updated = updated.localCheckpoint(eager=True)
-        changed = obs.get["n"]
-        labels = updated.drop("__changed")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters did not reach a fixed point in {max_iter} "
-            "rounds — labels are only partially propagated (clusters "
-            "would be silently split); raise max_iter")
-    edges.unpersist()  # labels are checkpoint-materialized; cache free
+    # released on every exit (converged, max_iter raise, a failed
+    # round): labels are checkpoint-materialized, so nothing below
+    # reads the cached edges once the loop is left
+    try:
+        labels = labels.localCheckpoint(eager=True)
+        converged = False
+        for _ in range(max_iter):
+            neighbor_min = (edges.join(labels, edges.dst == labels.vid)
+                            .groupBy("src")
+                            .agg(F.min("label").alias("nmin")))
+            prop = (labels.join(neighbor_min,
+                                labels.vid == neighbor_min.src, "left")
+                    .select(F.col("vid"),
+                            F.col("label").alias("__old"),
+                            F.least(F.col("label"),
+                                    F.coalesce(F.col("nmin"), F.col("label")))
+                            .alias("__mid")))
+            # pointer doubling: look up the label OF the new label (labels
+            # are always vertex ids, so the self-join always resolves; left
+            # join + coalesce guards ids outside the vertex universe)
+            ref = prop.select(F.col("vid").alias("__rvid"),
+                              F.col("__mid").alias("__rlab"))
+            updated = (prop.join(ref, prop.__mid == ref.__rvid, "left")
+                       .select(F.col("vid"),
+                               F.least(F.col("__mid"),
+                                       F.coalesce(F.col("__rlab"),
+                                                  F.col("__mid")))
+                               .alias("label"),
+                               F.col("__old")))
+            updated = updated.withColumn(
+                "__changed", F.col("label") != F.col("__old")).drop("__old")
+            # materialize once per round: breaks the exponentially growing
+            # lineage AND serves the convergence check from the same pass.
+            # The changed-count rides the checkpoint job itself via
+            # observe() (r13 optimization): the eager localCheckpoint fires
+            # the CollectMetrics node, so obs.get returns without a second
+            # action — one driver round trip per round instead of two, and
+            # at cluster scale one fewer full read of the label table.
+            obs = Observation()
+            updated = updated.observe(
+                obs, F.sum(F.col("__changed").cast("long")).alias("n"))
+            updated = updated.localCheckpoint(eager=True)
+            changed = obs.get["n"]
+            labels = updated.drop("__changed")
+            if changed == 0:
+                converged = True
+                break
+        if not converged:
+            raise RuntimeError(
+                f"dedup_clusters did not reach a fixed point in {max_iter} "
+                "rounds — labels are only partially propagated (clusters "
+                "would be silently split); raise max_iter")
+    finally:
+        edges.unpersist()
     return labels.select(F.col("vid").alias(id_col),
                          F.col("label").alias("cluster_rep"))
 

@@ -688,8 +688,11 @@ class TestDedupClusters:
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(63)], "id_a long, id_b long")
         vertices = spark.range(64).withColumnRenamed("id", "doc_id")
+        spark.catalog.clearCache()
         with _pytest.raises(RuntimeError, match="fixed point"):
             dedup_clusters(pairs, vertices, max_iter=2)
+        # the raise still releases the persisted edge table
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestSignCellANN:
