@@ -56,35 +56,6 @@ def merge_upsert(existing: DataFrame, updates: DataFrame,
             .drop("__rn", "__src"))
 
 
-def _purge_partition_dirs(spark, path: str, pcols: list[str],
-                          parts) -> int:
-    """Remove stale partition directories through the Hadoop
-    FileSystem API.
-
-    os.path/shutil only works on a POSIX mount — on an object store
-    (s3a://, gs://, abfs://) it silently no-ops and leaves the stale
-    partition VISIBLE, which for the GDPR delete path is a compliance
-    failure, not a perf bug. ``Path.getFileSystem`` resolves whatever
-    scheme ``path`` carries (local file:// included), so the same code
-    path is exercised by the local pytests and production stores.
-    Returns the number of directories actually removed.
-    """
-    from .sink import NULL_PARTITION
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    purged = 0
-    for t in parts:
-        sub = "/".join(f"{c}={NULL_PARTITION if v is None else v}"
-                       for c, v in zip(pcols, t))
-        p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + sub)
-        fs = p.getFileSystem(hconf)
-        # recursive delete; False return = already absent (benign race)
-        if fs.exists(p) and fs.delete(p, True):
-            purged += 1
-    return purged
-
-
 def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
                              keys: list[str], ts_col: str,
                              order_by: list[Column] | None = None,
@@ -110,20 +81,27 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
     2. only those partitions are read back (partition-pruned filter) and
        merged with :func:`merge_upsert` — one shuffle over the affected
        slice, never the table;
-    3. the result lands via DYNAMIC partition overwrite
-       (``spark.sql.sources.partitionOverwriteMode=dynamic``), which
-       replaces exactly the partitions present in the output and leaves
-       every other directory's files byte-identical;
+    3. the result lands through :func:`~.sink.replace_partitions`: a
+       dynamic partition overwrite set on the writer, which replaces
+       exactly the partitions present in the output and leaves every
+       other directory's files byte-identical;
     4. a touched partition whose every row was superseded into another
        hour produces no output rows — dynamic overwrite would skip it,
-       so its now-stale directory is removed explicitly.
+       so the same helper removes its now-stale directory.
+
+    A table that does not exist yet (checked through the Hadoop FS API,
+    so object-store and ``file://`` paths count) merges against an
+    empty frame: the first batch creates it, one row per key, by the
+    same winner rule as every later batch.
 
     Returns ``{"affected_partitions": n, "rewritten": n, "purged": n}``.
     """
-    from .sink import PARTITION_COLS, partition_filter, with_time_partitions
+    from .sink import (PARTITION_COLS, partition_filter, path_exists,
+                       replace_partitions, with_time_partitions)
 
-    existing = spark.read.format(fmt).load(path)
     upd = with_time_partitions(updates, ts_col)
+    existing = (spark.read.format(fmt).load(path)
+                if path_exists(spark, path) else upd.limit(0))
     upd_keys = updates.select(*keys).distinct()
 
     pcols = list(PARTITION_COLS)
@@ -151,24 +129,9 @@ def merge_upsert_partitioned(spark, path: str, updates: DataFrame,
         order_dominates=order_dominates,
     ).localCheckpoint(eager=True)
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        (merged.write.mode("overwrite")
-         .option("maxRecordsPerFile", max_records_per_file)
-         .partitionBy(*pcols).format(fmt).save(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    # purge affected partitions that ended up with zero rows (dynamic
-    # overwrite never touches a partition absent from the output, so a
-    # fully-superseded hour would otherwise keep its stale files) —
-    # through the Hadoop FS API so object stores purge too.
-    written = {tuple(r) for r in merged.select(*pcols).distinct().collect()}
-    purged = _purge_partition_dirs(spark, path, pcols,
-                                   affected_set - written)
+    written, purged = replace_partitions(
+        merged, path, pcols, affected_set, fmt=fmt,
+        max_records_per_file=max_records_per_file)
     return {"affected_partitions": len(affected_set),
             "rewritten": len(written & affected_set), "purged": purged}
 
@@ -189,15 +152,16 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
     2. those partitions alone are read back (the same
        :func:`~.sink.partition_filter` directory prune) and anti-joined
        against the keys;
-    3. survivors land via dynamic partition overwrite; a partition
-       whose every row matched is purged explicitly (dynamic overwrite
-       skips empty outputs — the merge operator's stale-hour rule).
+    3. survivors land through :func:`~.sink.replace_partitions`, which
+       also purges a partition whose every row matched (dynamic
+       overwrite skips empty outputs — the merge operator's stale-hour
+       rule).
 
     Returns ``{"affected_partitions", "rewritten", "purged",
     "deleted_rows"}`` — the deletion-audit record a compliance log
     wants.
     """
-    from .sink import PARTITION_COLS, partition_filter
+    from .sink import PARTITION_COLS, partition_filter, replace_partitions
 
     existing = spark.read.format(fmt).load(path)
     del_keys = keys_df.select(*keys).distinct()
@@ -217,20 +181,9 @@ def delete_keys_partitioned(spark, path: str, keys_df: DataFrame,
             .localCheckpoint(eager=True))
     deleted = slice_.count() - kept.count()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        (kept.write.mode("overwrite")
-         .option("maxRecordsPerFile", max_records_per_file)
-         .partitionBy(*pcols).format(fmt).save(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    written = {tuple(r) for r in kept.select(*pcols).distinct().collect()}
-    purged = _purge_partition_dirs(spark, path, pcols,
-                                   affected_set - written)
+    written, purged = replace_partitions(
+        kept, path, pcols, affected_set, fmt=fmt,
+        max_records_per_file=max_records_per_file)
     return {"affected_partitions": len(affected_set),
             "rewritten": len(written & affected_set),
             "purged": purged, "deleted_rows": deleted}

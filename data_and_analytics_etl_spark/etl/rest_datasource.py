@@ -306,6 +306,7 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         self.end = int(options["end"]) if "end" in options else None
         self.rows_per_batch = int(options.get("rows_per_batch", 1000))
         self.limit = int(options.get("limit", 200))
+        self.request_limit = int(options.get("request_limit", 1000))
         self.transport_spec = options.get("transport", "synthetic")
         self.http_cfg = {k[5:]: v for k, v in options.items()
                          if k.startswith("http.")}
@@ -321,9 +322,11 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         return {"pos": self.start}
 
     def _pull(self, lo: int, hi: int) -> list[tuple]:
+        # the same hard request budget as the batch reader: a transport
+        # that never stops returning a cursor must not page forever
         rows: list[tuple] = []
         cursor = None
-        while True:
+        for _ in range(self.request_limit):
             envelope = self._t()({"lo": lo, "hi": hi,
                                   "limit": self.limit, "cursor": cursor})
             rows.extend((obj["id"], obj["k"])
@@ -331,6 +334,9 @@ class RestStreamReader(SimpleDataSourceStreamReader):
             cursor = (envelope.get("meta") or {}).get("next") or None
             if not cursor:
                 return rows
+        raise RuntimeError(
+            f"request budget exhausted ({self.request_limit}) in "
+            f"window [{lo}, {hi})")
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         lo = int(start["pos"])

@@ -87,9 +87,8 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str,
     AQE splits an oversized hot hour across tasks (maxRecordsPerFile
     then caps the files) and coalesces tiny hours together. Default
     off: the plain form preserves upstream partitioning for callers
-    whose batches already span few hours — the streaming merge-sink
-    bootstrap (streaming/ops.py:stream_merge_to_partitioned) and the
-    direct probe/test writes; the production ingest paths
+    whose batches already span few hours — the direct probe and test
+    writes; the production ingest paths
     (etl/ingest.py:incremental_ingest, job.py's REST pull, the
     versioned streaming sink) all pass ``align_partitions=True``.
     """
@@ -104,53 +103,64 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str,
      .save(path))
 
 
-def read_partitioned(spark, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a partitioned dataset back; partition columns come back as
-    directory-derived values, so time-window filters prune directories
-    (PruneFileSourcePartitions)."""
-    return spark.read.format(fmt).load(path)
+def _fs_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path``, resolved by its scheme.
 
-
-def compact(spark, path: str, fmt: str = "parquet",
-            target_records_per_file: int = 1_000_000) -> tuple[int, int]:
-    """Small-file compaction: rewrite a dataset at a healthy file size.
-
-    Incremental sinks accumulate small files (every micro-batch/run
-    writes at least one per partition); scans then pay per-file open
-    cost and lose vectorized-read efficiency. Compaction = read, write
-    to a sibling dir with a larger ``maxRecordsPerFile``, atomic-ish
-    swap. Returns (files_before, files_after).
-
-    The rewrite preserves the Hive partition layout when present
-    (partition columns round-trip through the read), so partition
-    pruning still works afterwards.
+    os.path/shutil only see a POSIX mount: on an object store (s3a://,
+    gs://, abfs://) or a ``file://`` URI they report every path absent.
+    ``Path.getFileSystem`` resolves whatever scheme ``path`` carries, so
+    the local pytests exercise the production code path.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
-    def count_files(p):
-        return len(_glob.glob(f"{p}/**/*.{fmt}", recursive=True))
 
-    before = count_files(path)
-    df = spark.read.format(fmt).load(path)
-    part_cols = [c for c in PARTITION_COLS if c in df.columns]
-    tmp = path.rstrip("/") + "__compact"
-    if part_cols:
-        # Partition-aligned shuffle: without it every write task that
-        # holds rows of a partition emits its own file there, and the
-        # rewrite reproduces the fragmentation it was meant to fix.
-        df = df.repartition(*[F.col(c) for c in part_cols])
-    w = (df.write.mode("overwrite")
-         .option("maxRecordsPerFile", target_records_per_file))
-    if part_cols:
-        w = w.partitionBy(*part_cols)
-    w.format(fmt).save(tmp)
-    old = path.rstrip("/") + "__old"
-    _os.rename(path, old)
-    _os.rename(tmp, path)
-    _shutil.rmtree(old)
-    return before, count_files(path)
+def path_exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, on any Hadoop-supported store."""
+    fs, p = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def replace_partitions(df: DataFrame, path: str, pcols,
+                       affected=(), fmt: str = "parquet",
+                       max_records_per_file: int = 100_000,
+                       ) -> tuple[set, int]:
+    """Replace partitions of the Hive-layout table at ``path`` in place:
+    every partition ``df`` has rows for is rewritten with exactly those
+    rows, every other partition's files stay byte-identical.
+
+    The write is a DYNAMIC partition overwrite requested on the writer
+    itself (``partitionOverwriteMode`` option), so the session conf is
+    never written and no other query in the session sees a temporary
+    mode. Dynamic overwrite never touches a partition absent from the
+    output, so each of ``affected`` (value tuples in ``pcols`` order)
+    that got no rows — every row superseded into another hour, or
+    deleted — would keep its stale files. Those directories are removed
+    through the Hadoop FS API: on an object store a stale partition left
+    visible is, for the GDPR delete path, a compliance failure.
+
+    ``df`` must not read from ``path``: Spark refuses to overwrite a
+    path its write plan still reads, so callers localCheckpoint the
+    slice they read back. Returns ``(written, purged)``: the partitions
+    ``df`` wrote (computed only when ``affected`` is given) and the
+    number of affected directories removed.
+    """
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .option("maxRecordsPerFile", max_records_per_file)
+     .partitionBy(*pcols).format(fmt).save(path))
+    if not affected:
+        return set(), 0
+    written = {tuple(r) for r in df.select(*pcols).distinct().collect()}
+    purged = 0
+    for t in set(affected) - written:
+        sub = "/".join(f"{c}={NULL_PARTITION if v is None else v}"
+                       for c, v in zip(pcols, t))
+        fs, p = _fs_path(df.sparkSession, path.rstrip("/") + "/" + sub)
+        # recursive delete; False return = already absent (benign race)
+        if fs.exists(p) and fs.delete(p, True):
+            purged += 1
+    return written, purged
 
 
 def compact_partitions(spark, path: str, fmt: str = "parquet",
@@ -160,10 +170,10 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     fragmented partitions of an hourly-layout table, leave every other
     partition's files byte-identical.
 
-    :func:`compact` rewrites the whole table — fine for a one-off, a
-    non-starter at 100 TB where an incremental sink fragments only the
-    recent hours while years of cold partitions are already healthy.
-    This variant bounds write amplification by the fragmentation:
+    Rewriting the whole table is a non-starter at 100 TB, where an
+    incremental sink fragments only the recent hours while years of
+    cold partitions are already healthy; write amplification is bounded
+    by the fragmentation instead:
 
     1. per-partition file counts come from a DIRECTORY LISTING (no data
        scan, the vacuum_partitions rule); a partition is fragmented
@@ -173,8 +183,8 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
        PruneFileSourcePartitions folds into a directory prune;
     3. the slice is repartitioned BY the partition columns (without
        this every write task holding rows of an hour emits its own
-       file there, reproducing the fragmentation) and rewritten via
-       DYNAMIC partition overwrite, which replaces exactly the
+       file there, reproducing the fragmentation) and rewritten by
+       :func:`replace_partitions`, which replaces exactly the
        partitions present in the output;
     4. row content is untouched — compaction is a physical-layout
        operation; a read-back must equal the pre-compaction table.
@@ -221,16 +231,10 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
               .repartition(*[F.col(c) for c in pcols])
               .localCheckpoint(eager=True))
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        (slice_.write.mode("overwrite")
-         .option("maxRecordsPerFile", target_records_per_file)
-         .partitionBy(*pcols).format(fmt).save(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # compaction keeps every row, so no partition empties out and none
+    # is passed as affected
+    replace_partitions(slice_, path, pcols, fmt=fmt,
+                       max_records_per_file=target_records_per_file)
 
     after = 0
     for rel in fragmented:

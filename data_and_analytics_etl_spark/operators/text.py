@@ -71,6 +71,7 @@ def ensure_fanout_parallelism(df: DataFrame,
 _EXCHANGE_NODE_NAMES = frozenset({
     "Aggregate", "Window", "Join", "Sort", "Deduplicate",
     "Repartition", "RepartitionByExpression", "RebalancePartitions",
+    "Intersect", "Except",
 })
 
 
@@ -80,15 +81,23 @@ def _crosses_exchange(jplan) -> bool:
     (r14 hardening) — the previous substring test over ``toString()``
     could be defeated by NEW operator names and, worse, silently
     tripped by plan TEXT: a column aliased ``sortKey``/``JoinOrder``
-    made a pure scan look shuffled, skipping the guard."""
+    made a pure scan look shuffled, skipping the guard.
+
+    A node that holds a subquery expression counts as crossing too:
+    ``IN``/``EXISTS`` subqueries are rewritten into a Join, and a scalar
+    subquery runs as its own job, so probing ``df.rdd`` would execute
+    either one — with or without an exchange inside the subquery. Inner
+    children (plans a node carries outside its children) are walked
+    like children."""
     stack = [jplan]
     while stack:
         node = stack.pop()
-        if node.nodeName() in _EXCHANGE_NODE_NAMES:
+        if (node.nodeName() in _EXCHANGE_NODE_NAMES
+                or node.subqueries().length()):
             return True
-        children = node.children()
-        for i in range(children.length()):
-            stack.append(children.apply(i))
+        for seq in (node.children(), node.innerChildren()):
+            for i in range(seq.length()):
+                stack.append(seq.apply(i))
     return False
 
 

@@ -47,6 +47,18 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+
+def default_driver_memory() -> str:
+    """Driver heap default: half the host's physical memory, capped at
+    32g. A fixed 32g heap on a 16 GB host lets the JVM grow past
+    physical memory until the kernel kills it; half leaves room for the
+    JVM's off-heap use and the Python side. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") \
+        // (1024 * 1024)
+    return f"{max(1, min(32 * 1024, phys_mb // 2))}m"
+
+
 #: Startup-only confs (must be set before the JVM context exists).
 STARTUP_CONF: dict[str, str] = {
     # Broadcast threshold: generous for local test scale; AQE still
@@ -56,7 +68,8 @@ STARTUP_CONF: dict[str, str] = {
     # adaptive batch sizing (util.py:59-85).
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.compression.codec": "snappy",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                          default_driver_memory()),
     "spark.ui.enabled": "false",
 }
 

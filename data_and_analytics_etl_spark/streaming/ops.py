@@ -171,32 +171,22 @@ def stream_merge_to_partitioned(stream_df: DataFrame, path: str,
     (re-applying a batch re-elects the same winners), so the TABLE state
     is effectively exactly-once — the same replay-safety argument as the
     batch checkpoint contract (write-then-commit, SURVEY §7.4). The
-    first batch bootstraps the table with a plain partitioned write.
+    first batch creates the table through the same merge (against an
+    empty table); within a batch the newest ``ts`` wins, every column
+    breaking ties, so one row per key lands on every batch.
 
     Returns the started StreamingQuery (availableNow trigger); callers
     ``awaitTermination()``.
     """
-    import os
-
     from ..etl.merge import merge_upsert_partitioned
-    from ..etl.sink import write_partitioned
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if not os.path.isdir(path):
-            # bootstrap: dedup within the batch (merge keys must be
-            # unique in the table), newest ts wins — same winner rule
-            # the merge applies on later batches
-            from ..operators.dedup import keyed_dedup
-            first = keyed_dedup(batch_df, keys,
-                                [F.col(ts_col).desc()] +
-                                [F.col(c) for c in batch_df.columns])
-            write_partitioned(first, path, ts_col, fmt=fmt)
-            return
-        merge_upsert_partitioned(batch_df.sparkSession, path, batch_df,
-                                 keys, ts_col,
-                                 order_by=[F.col(ts_col).desc()], fmt=fmt)
+        merge_upsert_partitioned(
+            batch_df.sparkSession, path, batch_df, keys, ts_col,
+            order_by=[F.col(ts_col).desc()]
+            + [F.col(c) for c in batch_df.columns], fmt=fmt)
 
     return (stream_df.writeStream
             .foreachBatch(_apply)
@@ -659,10 +649,12 @@ def stream_cdc_to_partitioned(stream_df: DataFrame, path: str,
     then ONE partition-targeted MERGE with ``order_dominates=True``
     on (__seq DESC, __deleted ASC): the stored seq — not the batch
     boundary — decides every conflict, cross-batch reordering
-    included. Read the table through :func:`read_cdc_table`, which
-    filters tombstones; tombstones are retained until a compaction
-    with a seq horizon older than the source's maximum reordering
-    window (the Kafka-compaction delete.retention.ms contract).
+    included. The first batch creates the table through the same
+    MERGE, against an empty table. Read the table through
+    :func:`read_cdc_table`, which filters tombstones; tombstones are
+    retained until a compaction with a seq horizon older than the
+    source's maximum reordering window (the Kafka-compaction
+    delete.retention.ms contract).
 
     At-least-once foreachBatch + an idempotent batch body
     (re-applying re-elects the same winners against the same stored
@@ -670,10 +662,7 @@ def stream_cdc_to_partitioned(stream_df: DataFrame, path: str,
 
     Returns the started StreamingQuery (availableNow trigger).
     """
-    import os
-
     from ..etl.merge import merge_upsert_partitioned
-    from ..etl.sink import write_partitioned
     from ..operators.dedup import keyed_dedup
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
@@ -696,9 +685,6 @@ def stream_cdc_to_partitioned(stream_df: DataFrame, path: str,
                 .select(*keys, ts_col, "__seq", "__deleted",
                         *[F.when(~F.col("__deleted"), F.col(c))
                           .alias(c) for c in payload]))
-        if not os.path.isdir(path):
-            write_partitioned(rows, path, ts_col, fmt=fmt)
-            return
         merge_upsert_partitioned(
             batch_df.sparkSession, path, rows, keys, ts_col,
             order_by=[F.col("__seq").desc_nulls_last(),

@@ -301,26 +301,6 @@ class TestRest:
             rest_sink(df, always_fail, max_failures=3)
 
 
-def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
-    from data_and_analytics_etl_spark.etl.sink import compact
-    ev = load_table(spark, sf_dir, "events").filter(F.col("ts") < F.lit(T1))
-    dest = str(tmp_path / "many")
-    # fragment like an incremental pipeline: 4 append runs over the same
-    # hours -> >=4 files per hive partition
-    for i in range(4):
-        write_partitioned(ev.filter(F.col("event_id") % 4 == i), dest, "ts")
-    n = ev.count()
-    before, after = compact(spark, dest,
-                            target_records_per_file=1_000_000)
-    assert before > after, (before, after)
-    back = spark.read.parquet(dest)
-    assert back.count() == n
-    # partition layout survived the rewrite
-    assert "year" in back.columns and "hour" in back.columns
-    import glob
-    assert glob.glob(f"{dest}/year=*/month=*/day=*/hour=*/*.parquet")
-
-
 def test_schema_evolution_merge_read(spark, sf_dir, tmp_path):
     """Incremental batches whose schema gains a column must read back as
     one dataset (mergeSchema) with NULLs for the old batches — the
@@ -479,12 +459,40 @@ class TestMergePartitioned:
         assert got == [(1, 10.0), (2, 20.0), (3, 33.0)]
 
 
+    def test_absent_table_is_created_one_row_per_key(self, spark,
+                                                     tmp_path):
+        # no table at the path yet: the merge runs against an empty one
+        # and elects keyed_dedup's winner per key
+        from data_and_analytics_etl_spark.etl.merge import \
+            merge_upsert_partitioned
+        updates = spark.createDataFrame(
+            [(1, dt.datetime(2024, 1, 1, 0, 10), 10.0),
+             (1, dt.datetime(2024, 1, 1, 2, 10), 11.0),   # newer ts wins
+             (2, dt.datetime(2024, 1, 1, 1, 10), 22.0),
+             (2, dt.datetime(2024, 1, 1, 1, 10), 20.0),   # tie: all cols
+             (3, None, 30.0)],
+            "event_id long, ts timestamp, value double")
+        order = [F.col("ts").desc()] + [F.col(c) for c in updates.columns]
+        dest = (tmp_path / "new" / "table").as_uri()
+        stats = merge_upsert_partitioned(spark, dest, updates,
+                                         keys=["event_id"], ts_col="ts",
+                                         order_by=order)
+        assert stats == {"affected_partitions": 4, "rewritten": 3,
+                         "purged": 0}
+        back = spark.read.parquet(dest).collect()
+        want = keyed_dedup(updates, ["event_id"], order).collect()
+        assert sorted((r.event_id, r.value) for r in back) \
+            == sorted((r.event_id, r.value) for r in want) \
+            == [(1, 11.0), (2, 20.0), (3, 30.0)]
+        assert {r.event_id: r.hour for r in back} == {1: 2, 2: 1, 3: None}
+
+
 class TestVacuumPartitions:
     def test_drops_only_strictly_older_hours(self, spark, tmp_path):
         import datetime as dt
 
         from data_and_analytics_etl_spark.etl.sink import (
-            read_partitioned, vacuum_partitions, write_partitioned)
+            vacuum_partitions, write_partitioned)
         base = dt.datetime(2024, 3, 1, 0, 0, 0)
         rows = [(i, base + dt.timedelta(hours=i), float(i))
                 for i in range(6)]
@@ -497,7 +505,7 @@ class TestVacuumPartitions:
             dest, base + dt.timedelta(hours=3, minutes=30))
         assert len(removed) == 3
         assert all("hour=" in r for r in removed)
-        back = read_partitioned(spark, dest)
+        back = spark.read.parquet(dest)
         assert sorted(r.id for r in back.collect()) == [3, 4, 5]
         # idempotent: nothing older remains
         assert vacuum_partitions(

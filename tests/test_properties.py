@@ -10,6 +10,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -2323,6 +2324,55 @@ class TestFanoutGuardPlanDetection:
             out = ensure_fanout_parallelism(shuffled, min_partitions=64)
             assert out is shuffled, shuffled._jdf.queryExecution() \
                 .analyzed().nodeName()
+
+    @staticmethod
+    def _construction_jobs(spark, df, name):
+        """Jobs the guard runs while building on ``df``, counted in a
+        job group of their own."""
+        import uuid
+        from data_and_analytics_etl_spark.operators.text import (
+            ensure_fanout_parallelism)
+        sc = spark.sparkContext
+        group = f"fanout-{name}-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "fan-out guard construction")
+        try:
+            ensure_fanout_parallelism(df, min_partitions=64)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_intersect_runs_no_job(self, tmp_path):
+        spark = self._spark()
+        base = self._one_partition_scan(spark, tmp_path)
+        df = base.intersect(base.filter(F.col("x") < 50))
+        assert self._construction_jobs(spark, df, "intersect") == 0
+
+    def test_except_runs_no_job(self, tmp_path):
+        spark = self._spark()
+        base = self._one_partition_scan(spark, tmp_path)
+        df = base.subtract(base.filter(F.col("x") < 50))
+        assert self._construction_jobs(spark, df, "except") == 0
+
+    @pytest.mark.parametrize("where", [
+        # the only exchange is inside the subquery's GROUP BY
+        "x IN (SELECT y FROM {t} GROUP BY y)",
+        # no exchange anywhere: the IN becomes a join, the scalar
+        # subquery a job of its own
+        "x IN (SELECT y FROM {t})",
+        "x > (SELECT y FROM {t} WHERE x = 3)",
+    ])
+    def test_in_subquery_runs_no_job(self, tmp_path, where):
+        import uuid
+        spark = self._spark()
+        view = f"fanout_in_{uuid.uuid4().hex[:8]}"
+        self._one_partition_scan(spark, tmp_path) \
+            .createOrReplaceTempView(view)
+        try:
+            df = spark.sql(f"SELECT * FROM {view} WHERE "
+                           + where.format(t=view))
+            assert self._construction_jobs(spark, df, "in") == 0
+        finally:
+            spark.catalog.dropTempView(view)
 
     def test_multi_partition_scan_is_noop(self, tmp_path):
         import os

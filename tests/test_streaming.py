@@ -13,6 +13,7 @@ import os
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from data_and_analytics_etl_spark.catalog import load_table
 from data_and_analytics_etl_spark.operators.sessionize import session_stats
@@ -279,6 +280,37 @@ class TestStreamMergeSink:
         assert [os.path.getmtime(f) for f in files2] == mtimes
 
 
+    def test_file_uri_table_one_row_per_key(self, spark, tmp_path):
+        # a file:// table is no local directory to os.path, which made
+        # every micro-batch "bootstrap" again and append its rows
+        from data_and_analytics_etl_spark.streaming.ops import (
+            stream_merge_to_partitioned)
+        src = tmp_path / "src"
+        base = dt.datetime(2024, 3, 1, 10, 0, 0)
+        cols = "event_id long, ts timestamp, value double"
+        spark.createDataFrame(
+            [(i, base + dt.timedelta(minutes=7 * i), float(i))
+             for i in range(10)], cols) \
+            .coalesce(1).write.parquet(str(src / "f1"))
+        spark.createDataFrame(
+            [(i, base + dt.timedelta(minutes=7 * i), 100.0 + i)
+             for i in range(5)], cols) \
+            .coalesce(1).write.parquet(str(src / "f2"))
+        table = (tmp_path / "table").as_uri()
+        schema = spark.read.parquet(str(src / "f1")).schema
+        q = stream_merge_to_partitioned(
+            self._stream(spark, str(src / "*" / "*.parquet"), schema),
+            table, keys=["event_id"], ts_col="ts",
+            checkpoint_dir=str(tmp_path / "ckpt"))
+        q.awaitTermination()
+        assert len(q.recentProgress) == 2   # two micro-batches
+        got = {r.event_id: r.value
+               for r in spark.read.parquet(table).collect()}
+        assert spark.read.parquet(table).count() == 10
+        assert got == {i: (100.0 + i if i < 5 else float(i))
+                       for i in range(10)}
+
+
 class TestStreamSketchSink:
     """foreachBatch incremental count-min maintenance: the streamed
     sketch must equal a batch build over everything streamed, exactly
@@ -407,6 +439,23 @@ class TestRestStreamSource:
                  .option("start", 0).option("end", 2500).load())
         assert (got.exceptAll(batch).count() == 0
                 and batch.exceptAll(got).count() == 0)
+
+    def test_request_budget(self):
+        # driver-side: a transport that always returns a cursor must
+        # stop at request_limit calls, as the batch reader does
+        from data_and_analytics_etl_spark.etl.rest_datasource import (
+            RestStreamReader)
+        calls = []
+
+        def endless(params):
+            calls.append(params)
+            return {"meta": {"next": "more"},
+                    "objects": [{"id": params["lo"], "k": "v"}]}
+        reader = RestStreamReader({"request_limit": "5"})
+        reader._transport = endless
+        with pytest.raises(RuntimeError, match="request budget"):
+            reader.read({"pos": 0})
+        assert len(calls) == 5
 
     def test_offset_resume_pulls_only_the_delta(self, spark, tmp_path):
         from data_and_analytics_etl_spark.etl.rest_datasource import (
@@ -938,6 +987,26 @@ class TestStreamCdcApply:
         assert len(raw) == 1 and raw[0]["__deleted"] is True
         assert raw[0]["value"] is None
         assert self._live(spark, dest) == {}
+
+
+    def test_file_uri_table_one_row_per_key(self, spark, tmp_path):
+        # two micro-batches into a file:// table: the second must merge,
+        # not append a second row per updated key
+        src = str(tmp_path / "src")
+        dest = (tmp_path / "tbl").as_uri()
+        ckpt = str(tmp_path / "ckpt")
+        os.makedirs(src)
+        t = dt.datetime(2024, 1, 1, 12)
+        self._write_batch(spark, src, "b1", [
+            (i, 10, "upsert", float(i), t) for i in range(10)])
+        schema = spark.read.parquet(f"{src}/b1.parquet").schema
+        self._run(spark, src, dest, ckpt, schema)
+        self._write_batch(spark, src, "b2", [
+            (i, 20, "upsert", 100.0 + i, t) for i in range(5)])
+        self._run(spark, src, dest, ckpt, schema)
+        assert spark.read.parquet(dest).count() == 10
+        assert self._live(spark, dest) == {
+            i: (100.0 + i if i < 5 else float(i)) for i in range(10)}
 
 
 class TestNoveltyFilter:
