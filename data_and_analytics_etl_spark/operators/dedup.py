@@ -22,7 +22,9 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
+
+from .fixpoint import fixpoint
 
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -430,75 +432,45 @@ def dedup_clusters(pairs: DataFrame, vertices: DataFrame,
                                        F.col("id_a").alias("dst"))))
     labels = vertices.select(F.col(id_col).alias("vid"),
                              F.col(id_col).alias("label"))
-    # Loop-invariant edges are PRE-PARTITIONED on the join key and
-    # persisted (r14, guide §2.4) instead of localCheckpoint'ed: a
-    # checkpointed RDD reports UnknownPartitioning, so every round's
-    # neighbor join re-exchanged the edge table — at scale that is a
-    # pair-table shuffle per round. The persisted repartition("dst")
-    # survives through InMemoryTableScan's outputPartitioning and the
-    # per-round join adds NO edge-side exchange (plan-verified with
-    # broadcast disabled to emulate the at-scale strategy:
-    # ENSURE_REQUIREMENTS exchange on dst gone; only the one-time
-    # REPARTITION_BY_COL cache build remains —
-    # scripts/ab_b12_edges_prepartition.py; local timing flat, 0.96
-    # vs 0.98 s min). Labels keep the eager checkpoint: they change
-    # every round, and the checkpoint is what truncates the growing
-    # lineage.
+    # Loop-invariant edges are pre-partitioned on the join key and
+    # persisted, not checkpointed: a checkpointed RDD reports
+    # UnknownPartitioning, so every round's neighbor join would
+    # re-exchange the edge table, while the persisted repartition("dst")
+    # survives InMemoryTableScan and the join plans no edge-side
+    # exchange (plan-verified with broadcast disabled; local timing
+    # flat, 0.96 vs 0.98 s; A/B script in commit 6a42285).
     edges = edges.repartition("dst").persist(StorageLevel.MEMORY_AND_DISK)
-    # released on every exit (converged, max_iter raise, a failed
-    # round): labels are checkpoint-materialized, so nothing below
-    # reads the cached edges once the loop is left
-    try:
-        labels = labels.localCheckpoint(eager=True)
-        converged = False
-        for _ in range(max_iter):
-            neighbor_min = (edges.join(labels, edges.dst == labels.vid)
-                            .groupBy("src")
-                            .agg(F.min("label").alias("nmin")))
-            prop = (labels.join(neighbor_min,
-                                labels.vid == neighbor_min.src, "left")
-                    .select(F.col("vid"),
-                            F.col("label").alias("__old"),
-                            F.least(F.col("label"),
-                                    F.coalesce(F.col("nmin"), F.col("label")))
-                            .alias("__mid")))
-            # pointer doubling: look up the label OF the new label (labels
-            # are always vertex ids, so the self-join always resolves; left
-            # join + coalesce guards ids outside the vertex universe)
-            ref = prop.select(F.col("vid").alias("__rvid"),
-                              F.col("__mid").alias("__rlab"))
-            updated = (prop.join(ref, prop.__mid == ref.__rvid, "left")
-                       .select(F.col("vid"),
-                               F.least(F.col("__mid"),
-                                       F.coalesce(F.col("__rlab"),
-                                                  F.col("__mid")))
-                               .alias("label"),
-                               F.col("__old")))
-            updated = updated.withColumn(
-                "__changed", F.col("label") != F.col("__old")).drop("__old")
-            # materialize once per round: breaks the exponentially growing
-            # lineage AND serves the convergence check from the same pass.
-            # The changed-count rides the checkpoint job itself via
-            # observe() (r13 optimization): the eager localCheckpoint fires
-            # the CollectMetrics node, so obs.get returns without a second
-            # action — one driver round trip per round instead of two, and
-            # at cluster scale one fewer full read of the label table.
-            obs = Observation()
-            updated = updated.observe(
-                obs, F.sum(F.col("__changed").cast("long")).alias("n"))
-            updated = updated.localCheckpoint(eager=True)
-            changed = obs.get["n"]
-            labels = updated.drop("__changed")
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"dedup_clusters did not reach a fixed point in {max_iter} "
-                "rounds — labels are only partially propagated (clusters "
-                "would be silently split); raise max_iter")
-    finally:
-        edges.unpersist()
+
+    def hop(labels: DataFrame, _):
+        neighbor_min = (edges.join(labels, edges.dst == labels.vid)
+                        .groupBy("src")
+                        .agg(F.min("label").alias("nmin")))
+        prop = (labels.join(neighbor_min,
+                            labels.vid == neighbor_min.src, "left")
+                .select(F.col("vid"),
+                        F.col("label").alias("__old"),
+                        F.least(F.col("label"),
+                                F.coalesce(F.col("nmin"), F.col("label")))
+                        .alias("__mid")))
+        # pointer doubling: look up the label OF the new label (labels
+        # are always vertex ids, so the self-join always resolves; left
+        # join + coalesce guards ids outside the vertex universe)
+        ref = prop.select(F.col("vid").alias("__rvid"),
+                          F.col("__mid").alias("__rlab"))
+        updated = (prop.join(ref, prop.__mid == ref.__rvid, "left")
+                   .select(F.col("vid"),
+                           F.least(F.col("__mid"),
+                                   F.coalesce(F.col("__rlab"),
+                                              F.col("__mid")))
+                           .alias("label"),
+                           F.col("__old")))
+        # the changed count is the round's observed convergence scalar
+        return updated, F.sum((F.col("label") != F.col("__old"))
+                              .cast("long"))
+
+    labels, _ = fixpoint("dedup_clusters", (labels, None), hop,
+                         rounds=max_iter, until=lambda _, n: n == 0,
+                         cap="max_iter", release=(edges,))
     return labels.select(F.col("vid").alias(id_col),
                          F.col("label").alias("cluster_rep"))
 

@@ -9,15 +9,15 @@ Scale posture (same rules as the CC loop):
 - each iteration is ONE equi-join (ranks ⨝ out-edges) and ONE
   aggregate (sum per dst) — both bucketed shuffles on node id, never
   node×node;
-- the edge/degree frame is computed once and persisted (read every
-  iteration);
-- per-iteration `localCheckpoint` truncates lineage so the plan stays
-  O(1)-deep instead of O(iters)-deep (10 chained joins would otherwise
-  blow up optimization time and executor stack);
-- iteration count is FIXED (power iteration with damping converges
-  geometrically; 10-20 rounds is the standard operating point), so the
-  driver loop is bounded by construction — no data-dependent driver
-  polling at all.
+- the edge/degree frames are computed once, persisted (read every
+  iteration) and released when the loop ends;
+- the loop is `operators/fixpoint.py`: one eager `localCheckpoint` per
+  iteration keeps the plan O(1)-deep instead of O(iters)-deep (10
+  chained joins would otherwise blow up optimization time and executor
+  stack) and carries the round's scalar through `observe()`;
+- PageRank's iteration count is FIXED (power iteration with damping
+  converges geometrically; 10-20 rounds is the standard operating
+  point) — no data-dependent stop rule at all.
 
 Determinism: rank updates sum doubles per dst node, so bit-identity
 across partitionings is NOT guaranteed (unlike the integer/decimal
@@ -28,9 +28,13 @@ the same evidence contract as the LSH family.
 
 from __future__ import annotations
 
+import itertools
+
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
+
+from .fixpoint import fixpoint
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -48,15 +52,28 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Σ rank stays 1 every round (pytest-pinned). Output: (node, rank).
     """
-    from pyspark.sql import Observation
+    def update(n: int, dmass: float, inflow: Column) -> Column:
+        return (F.lit((1.0 - damping) / n) + F.lit(damping * dmass / n)
+                + F.lit(damping) * inflow)
 
+    return _power_iteration("pagerank", edges, src, dst, iters,
+                            seed=lambda n: F.lit(1.0 / n),
+                            share=F.col("rank") / F.col("outdeg"),
+                            update=update)
+
+
+def _power_iteration(op: str, edges: DataFrame, src: str, dst: str,
+                     iters: int, seed, share: Column,
+                     update) -> DataFrame:
+    """The power-method loop shared by :func:`pagerank` and
+    :func:`pagerank_integer`; they differ only in arithmetic.
+    ``seed(n)`` is every node's starting rank, ``share`` a source's
+    contribution along each out-edge, and ``update(n, dangling mass,
+    inflow)`` the next rank. Output: (node, rank)."""
     # Loop-invariant edges pre-partitioned on the per-round join key
-    # (r14, guide §2.4; the dedup_clusters finding): the persisted
-    # partitioning survives through InMemoryTableScan, so the per-round
-    # contrib join plans NO edge-side exchange (plan-verified with
-    # broadcast disabled to emulate the at-scale join strategy; locally
-    # AQE broadcasts the rank side, so the change is free). One extra
-    # setup shuffle buys iters fewer edge-table shuffles at scale.
+    # and persisted: the partitioning survives InMemoryTableScan, so
+    # the contrib join plans no edge-side exchange at scale (verified
+    # with broadcast disabled) — one setup shuffle instead of iters.
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .distinct()
          .repartition("src")
@@ -69,47 +86,27 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
             .persist(StorageLevel.MEMORY_AND_DISK))
     n = base.count()  # one bounded action to size the teleport term
+    # Dangling mass is observed on each round's checkpoint and inlined
+    # as a literal into the next update (non-dangling rows add exact
+    # zeros): a 1-row aggregate + broadcast subtree instead would add
+    # two query stages per round and re-read the rank table at scale.
+    dang = F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))
+                 .otherwise(F.lit(0)))
 
-    def checkpoint_with_dang(frame: DataFrame) -> tuple[DataFrame, float]:
-        # Dangling mass rides the round's own checkpoint via observe()
-        # (r14; the b12/k_core fold): the old form planned a separate
-        # 1-row aggregate + broadcast SUBTREE over the checkpointed
-        # ranks inside the next round — two extra query stages per
-        # round whose cost at sf0.1 is almost pure stage dispatch, and
-        # at cluster scale a per-round re-read of the rank table. The
-        # observed sum is the same double aggregation over the same
-        # rows (when/otherwise adds exact +0.0 terms for non-dangling
-        # nodes); its value is inlined as a literal into the next
-        # round's update, which multiplies/divides in the same order
-        # as the old column expression.
-        obs = Observation()
-        out = frame.observe(
-            obs, F.sum(F.when(F.col("outdeg") == 0, F.col("rank"))
-                       .otherwise(F.lit(0.0))).alias("dang"))\
-            .localCheckpoint()
-        val = obs.get["dang"]
-        return out, float(val) if val is not None else 0.0
-
-    ranks, dang = checkpoint_with_dang(
-        base.select("node", "outdeg", F.lit(1.0 / n).alias("rank")))
-
-    for _ in range(iters):
+    def power_step(ranks: DataFrame, dmass):
         contrib = (ranks.filter(F.col("outdeg") > 0)
                    .join(e, ranks.node == e.src)
-                   .select(F.col("dst").alias("node"),
-                           (F.col("rank") / F.col("outdeg"))
-                           .alias("__c"))
+                   .select(F.col("dst").alias("node"), share.alias("__c"))
                    .groupBy("node")
                    .agg(F.sum("__c").alias("__in")))
-        upd = (base.join(contrib, "node", "left")
-               .select("node", "outdeg",
-                       (F.lit((1.0 - damping) / n)
-                        + F.lit(damping * dang / n)
-                        + F.lit(damping)
-                        * F.coalesce(F.col("__in"), F.lit(0.0)))
-                       .alias("rank")))
-        ranks, dang = checkpoint_with_dang(upd)
-    e.unpersist()
+        inflow = F.coalesce(F.col("__in"), F.lit(0))
+        return (base.join(contrib, "node", "left")
+                .select("node", "outdeg",
+                        update(n, dmass or 0, inflow).alias("rank"))), dang
+
+    ranks, _ = fixpoint(op, (base.select("node", "outdeg",
+                                         seed(n).alias("rank")), dang),
+                        power_step, rounds=int(iters), release=(e, base))
     return ranks.select("node", "rank")
 
 
@@ -297,53 +294,40 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     (least, greatest) and deduplicated up front, so reversed
     duplicates and self-loops cannot inflate degrees (the
     triangle_count contract, enforced rather than assumed). Each peel
-    round is one degree aggregate
-    (union of endpoints → hash agg) and two LEFT SEMI joins filtering
-    edges to surviving endpoints — all bucketed shuffles on node id,
-    never node×node. Per-round ``localCheckpoint`` keeps the plan
-    O(1)-deep (the pagerank rule); the fixpoint probe compares edge
-    counts (an edge count unchanged ⇔ no node fell below k, since
-    dropping a node removes its edges). Peel depth is data-dependent —
-    a path graph peels from the ends in O(n) rounds — so the loop
-    raises past ``max_rounds`` instead of silently returning a
-    non-core (the dedup_clusters convergence-guard contract).
+    round is one degree aggregate (union of endpoints → hash agg) and
+    two LEFT SEMI joins filtering edges to surviving endpoints — all
+    bucketed shuffles on node id, never node×node — checkpointed by
+    operators/fixpoint.py with the surviving-edge count observed. The
+    loop stops when that count is unchanged (no node fell below k,
+    since dropping a node removes its edges) or 0. Peel depth is
+    data-dependent — a path graph peels from the ends in O(n) rounds —
+    so the loop raises past ``max_rounds`` instead of silently
+    returning a non-core.
 
     Returns (node, degree) for the surviving core — empty when no
     k-core exists.
     """
-    obs0 = Observation()
     e = (edges.select(F.least(src, dst).alias("a"),
                       F.greatest(src, dst).alias("b"))
          .filter(F.col("a") != F.col("b"))
-         .distinct().observe(obs0, F.count(F.lit(1)).alias("n"))
-         .localCheckpoint(eager=True))
-    n_edges = obs0.get["n"]
-    for _ in range(max_rounds):
-        deg = (e.select(F.col("a").alias("node"))
-               .unionAll(e.select(F.col("b").alias("node")))
-               .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-        alive = deg.filter(F.col("degree") >= k).select("node")
-        # the surviving-edge count rides the eager localCheckpoint via
-        # observe() (the dedup_clusters r13 pattern): one driver action
-        # per peel round instead of two, one fewer read of the edge
-        # table per round
-        obs = Observation()
-        e2 = (e.join(alive.withColumnRenamed("node", "a"), "a",
-                     "left_semi")
-              .join(alive.withColumnRenamed("node", "b"), "b",
-                    "left_semi")
-              .observe(obs, F.count(F.lit(1)).alias("n"))
-              .localCheckpoint(eager=True))
-        n2 = obs.get["n"]
-        if n2 == n_edges:
-            return deg.filter(F.col("degree") >= k)
-        e, n_edges = e2, n2
-        if n_edges == 0:
-            return (deg.filter(F.lit(False))
-                    .select("node", "degree"))
-    raise RuntimeError(
-        f"k_core did not reach a fixpoint within {max_rounds} rounds; "
-        "raise max_rounds (peel depth is data-dependent)")
+         .distinct())
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (e.select(F.col("a").alias("node"))
+                .unionAll(e.select(F.col("b").alias("node")))
+                .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
+
+    def peel(e: DataFrame, _):
+        alive = degrees(e).filter(F.col("degree") >= k).select("node")
+        return (e.join(alive.withColumnRenamed("node", "a"), "a",
+                       "left_semi")
+                .join(alive.withColumnRenamed("node", "b"), "b",
+                      "left_semi")), F.count(F.lit(1))
+
+    core, _ = fixpoint("k_core", (e, F.count(F.lit(1))), peel,
+                       rounds=max_rounds,
+                       until=lambda n_prev, n: n in (n_prev, 0))
+    return degrees(core).filter(F.col("degree") >= k)
 
 
 def sssp_hops(edges: DataFrame, source, src: str = "src",
@@ -460,58 +444,24 @@ def pagerank_integer(edges: DataFrame, src: str = "src",
     stays the production path.
 
     Scale shape per round: one equi-join (ranks ⨝ edges on the
-    source) + one hash aggregate, a 1-row dangling aggregate
-    broadcast into the update — the :func:`pagerank` plan with the
+    source) + one hash aggregate, checkpointed eagerly with the exact
+    integer dangling sum observed on the same pass and inlined as a
+    literal into the next round — the :func:`pagerank` plan with the
     doubles swapped for longs. rank·damp_num ≤ scale·damp_num keeps
     everything far from the 2^63 cliff.
     """
-    # Loop-invariant edges pre-partitioned on the per-round join key
-    # (r14, guide §2.4; the dedup_clusters finding): the persisted
-    # partitioning survives through InMemoryTableScan, so the per-round
-    # contrib join plans NO edge-side exchange (plan-verified with
-    # broadcast disabled to emulate the at-scale join strategy; locally
-    # AQE broadcasts the rank side, so the change is free). One extra
-    # setup shuffle buys iters fewer edge-table shuffles at scale.
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .distinct()
-         .repartition("src")
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct())
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (nodes.join(outdeg, nodes.node == outdeg.src, "left")
-            .select("node",
-                    F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    n = base.count()  # one bounded action to size the teleport term
-    teleport = ((damp_den - damp_num) * scale) // (damp_den * n)
-    ranks = base.select(
-        "node", "outdeg",
-        F.lit(int(scale // n)).cast("long").alias("rank"))
+    def update(n: int, dmass: int, inflow: Column) -> Column:
+        # teleport and dangling terms in Python integers: floor == DIV
+        # on nonnegative operands
+        teleport = ((damp_den - damp_num) * scale) // (damp_den * n)
+        dterm = (damp_num * dmass) // (damp_den * n)
+        return (F.lit(teleport + dterm).cast("long") + inflow).cast("long")
 
-    for _ in range(int(iters)):
-        dang = (ranks.filter(F.col("outdeg") == 0)
-                .agg(F.coalesce(F.sum("rank"), F.lit(0))
-                     .cast("long").alias("__dang")))
-        contrib = (ranks.filter(F.col("outdeg") > 0)
-                   .join(e, ranks.node == e.src)
-                   .select(F.col("dst").alias("node"),
-                           F.expr(f"({damp_num}L * rank) DIV "
-                                  f"({damp_den}L * outdeg)")
-                           .alias("__share"))
-                   .groupBy("node")
-                   .agg(F.sum("__share").alias("__c")))
-        ranks = (base.join(contrib, "node", "left")
-                 .crossJoin(F.broadcast(dang))
-                 .select("node", "outdeg",
-                         (F.lit(int(teleport))
-                          + F.expr(f"({damp_num}L * __dang) DIV "
-                                   f"({damp_den}L * {n}L)")
-                          + F.coalesce(F.col("__c"), F.lit(0)))
-                         .cast("long").alias("rank"))
-                 .localCheckpoint(eager=False))
-    return ranks.select("node", "rank").orderBy("node")
+    return _power_iteration(
+        "pagerank_integer", edges, src, dst, iters,
+        seed=lambda n: F.lit(int(scale // n)).cast("long"),
+        share=F.expr(f"({damp_num}L * rank) DIV ({damp_den}L * outdeg)"),
+        update=update).orderBy("node")
 
 
 def jaccard_link_scores(edges: DataFrame, src: str = "src",
@@ -644,53 +594,51 @@ def hits_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
     deterministic variant with the same fixed point up to grid
     resolution, the pagerank_integer contract.
 
-    Scale shape per round: two equi-joins (edges ⨝ scores) + two hash
-    aggregates + two 1-row broadcast totals; per-round lazy
-    localCheckpoint lineage truncation. No collect of anything
-    node-sized.
+    Scale shape per half-step: one equi-join (edges ⨝ scores), one
+    hash aggregate and one left join onto the node table, checkpointed
+    eagerly with the raw total observed on the same pass; the next
+    half-step normalizes by that total as a literal. No collect of
+    anything node-sized.
     """
     if iters < 1:
-        # iters=0 would leave auth undefined and crash the final join
-        # with a confusing NoneType error — refuse at entry instead.
+        # iters=0 would leave no authority score — refuse at entry
         raise ValueError(f"hits_integer: iters must be >= 1, got {iters}")
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .distinct()
          .persist(StorageLevel.MEMORY_AND_DISK))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select(F.col("dst").alias("node")))
-             .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    hub = nodes.select("node", F.lit(int(scale)).cast("long").alias("h"))
     dec = "DECIMAL(38,0)"
 
-    def _norm(raw: DataFrame, col: str) -> DataFrame:
-        tot = raw.agg(F.sum(F.col(col)).cast("long").alias("__tot"))
-        return (raw.crossJoin(F.broadcast(tot))
-                .select("node",
-                        F.expr(f"CAST({col} AS {dec}) * "
-                               f"CAST({int(scale)} AS {dec}) DIV "
-                               f"CAST(__tot AS {dec})")
-                        .cast("long").alias(col)))
+    def norm(col: str, tot) -> Column:
+        # a zero (or, on an empty graph, NULL) total means every raw
+        # score is 0, which stays 0
+        return F.expr(f"CAST({col} AS {dec}) * CAST({int(scale)} AS {dec})"
+                      f" DIV CAST({tot or 1} AS {dec})").cast("long")
 
-    auth = None
-    for _ in range(int(iters)):
-        a_raw = (e.join(hub.withColumnRenamed("node", "src"), "src")
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.sum("h").alias("a")))
-        auth = (nodes.join(_norm(a_raw, "a"), "node", "left")
-                .select("node", F.coalesce("a", F.lit(0))
-                        .cast("long").alias("a"))
-                .localCheckpoint(eager=False))
-        h_raw = (e.join(auth.withColumnRenamed("node", "dst"), "dst")
-                 .groupBy(F.col("src").alias("node"))
-                 .agg(F.sum("a").alias("h")))
-        hub = (nodes.join(_norm(h_raw, "h"), "node", "left")
-               .select("node", F.coalesce("h", F.lit(0))
-                       .cast("long").alias("h"))
-               .localCheckpoint(eager=False))
-    return (nodes.join(auth, "node").join(hub, "node")
-            .select("node", F.col("a").alias("authority"),
-                    F.col("h").alias("hub"))
+    # half-steps alternate a <- h along src->dst and h <- a back along
+    # dst->src; the state (node, <normalized side>, <raw side>) holds
+    # every node, and the raw side is normalized one half-step later
+    flows = itertools.cycle([("h", "a", "src", "dst"),
+                             ("a", "h", "dst", "src")])
+
+    def half_step(state: DataFrame, tot):
+        frm, to, near, far = next(flows)
+        scores = state.select(
+            "node", (norm(frm, tot) if tot is not None else F.col(frm))
+            .alias(frm))
+        raw = (e.join(scores.withColumnRenamed("node", near), near)
+               .groupBy(F.col(far).alias("node"))
+               .agg(F.sum(frm).alias(to)))
+        return (scores.join(raw, "node", "left")
+                .select("node", frm, F.coalesce(to, F.lit(0))
+                        .cast("long").alias(to))), F.sum(to)
+
+    seed = (e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node"))).distinct()
+            .select("node", F.lit(int(scale)).cast("long").alias("h")))
+    state, h_tot = fixpoint("hits_integer", (seed, None), half_step,
+                            rounds=2 * int(iters), release=(e,))
+    return (state.select("node", F.col("a").alias("authority"),
+                         norm("h", h_tot).alias("hub"))
             .orderBy("node"))
 
 

@@ -12,6 +12,8 @@ import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 
+from .fixpoint import fixpoint
+
 
 def profile(df: DataFrame, columns: list[str] | None = None,
             exact: bool = False) -> DataFrame:
@@ -987,20 +989,20 @@ def mondrian_anonymize(df: DataFrame, quasi_cols: list[str], k: int,
     candidate counts, at most n/k classes), one rank window per class
     for the median (parallel across classes), and a broadcast of the
     classes-sized decision table back onto the rows; the "did any
-    class split?" convergence probe rides the eager localCheckpoint
-    itself via ``observe()`` (the dedup_clusters/k_core r13 pattern),
-    so each round is exactly ONE driver action — the earlier
-    per-round ``isEmpty()`` probes re-executed the round pipeline up
-    to twice more. Rounds are bounded by log2(n/k) and fenced by
-    ``max_rounds``; per-round localCheckpoint keeps lineage flat.
+    class split?" convergence probe rides the round's eager
+    localCheckpoint via ``observe()`` (operators/fixpoint.py), so each
+    round is exactly ONE driver action. Rounds are bounded by
+    log2(n/k); a class still splitting after ``max_rounds`` rounds
+    raises RuntimeError instead of returning an unconverged partition
+    (the default 32 is far above the bound).
     """
-    from pyspark.sql import Observation
     if k < 2:
         raise ValueError("k must be >= 2")
     if not quasi_cols:
         raise ValueError("need at least one quasi-identifier column")
-    cur = df.withColumn("__class", F.lit(0).cast("long")).localCheckpoint()
-    for _ in range(max_rounds):
+
+    def split(cur: DataFrame, _):
+        cur = cur.drop("__commit")
         stats = cur.groupBy("__class").agg(
             F.count(F.lit(1)).alias("__n"),
             *[f for c in quasi_cols
@@ -1047,22 +1049,20 @@ def mondrian_anonymize(df: DataFrame, quasi_cols: list[str], k: int,
                       .alias("__nr")))
         ok = (sizes.filter((F.col("__nl") >= k) & (F.col("__nr") >= k))
               .select("__class", F.lit(True).alias("__commit")))
-        obs = Observation()
         nxt = (sided.join(F.broadcast(ok), "__class", "left")
                .withColumn("__class",
                            F.when(F.col("__commit").isNotNull(),
                                   F.col("__class") * 2 + F.col("__side"))
                            .otherwise(F.col("__class")))
-               .observe(obs, F.sum(
-                   F.when(F.col("__commit").isNotNull(), 1)
-                   .otherwise(0)).alias("__n_committed"))
-               .drop("__col", "__val", "__rn", "__median", "__side",
-                     "__commit")
-               .localCheckpoint(eager=True))
-        if obs.get["__n_committed"] == 0:
-            break  # no class split: nxt is content-identical to cur
-        cur = nxt
-    return cur
+               .drop("__col", "__val", "__rn", "__median", "__side"))
+        return nxt, F.count("__commit")
+
+    # no class split: the last round is content-identical to the one
+    # before it
+    seed = df.withColumn("__class", F.lit(0).cast("long"))
+    cur, _ = fixpoint("mondrian_anonymize", (seed, None), split,
+                      rounds=max_rounds, until=lambda _, n: n == 0)
+    return cur.drop("__commit")
 
 
 def mondrian_class_ranges(anon: DataFrame,

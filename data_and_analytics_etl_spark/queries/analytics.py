@@ -1397,14 +1397,17 @@ SELECT
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_count
-    mutual = _mutual_knn_graph(spark, sf_dir)
+    mutual, _ = _mutual_knn_graph(spark, sf_dir)
     return triangle_count(mutual)
 
 
-def _mutual_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _mutual_knn_graph(spark: SparkSession,
+                      sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Mutual 5-NN cosine graph over the embedding corpus (src < dst
     unique undirected edges) — the shared substrate of the graph
-    probes (triangle count, k-core)."""
+    probes (triangle count, k-core) — and the persisted kNN list it
+    reads, which a consumer that materializes the graph eagerly
+    releases."""
     from pyspark import StorageLevel
 
     from ..operators.similarity import cosine_topk
@@ -1428,7 +1431,7 @@ def _mutual_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (knn.join(k2, (F.col("pa") == F.col("qb"))
                      & (F.col("pb") == F.col("qa")))
             .filter(F.col("pa") < F.col("pb"))
-            .select(F.col("pa").alias("src"), F.col("pb").alias("dst")))
+            .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))), knn
 
 
 @query(
@@ -1492,10 +1495,14 @@ ORDER BY node
 )
 def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import k_core
-    mutual = _mutual_knn_graph(spark, sf_dir)
-    return (k_core(mutual, k=3)
-            .select("node", "degree")
-            .orderBy("node"))
+    mutual, knn = _mutual_knn_graph(spark, sf_dir)
+    try:
+        # k_core returns a frame over its own checkpointed state, so
+        # the kNN cache is dead once it returns
+        core = k_core(mutual, k=3)
+    finally:
+        knn.unpersist()
+    return core.select("node", "degree").orderBy("node")
 
 
 @query(

@@ -1,8 +1,13 @@
-"""r14 verdict task 4: measure the 13-15 s graph registry rows —
-graph_pagerank and graph_local_clustering — with a job census, before
-touching anything.
+"""Job census for registry probes: construction and action wall time,
+the number of Spark jobs, and whether the probe left entries in the
+JVM CacheManager once its action finished.
 
-Usage: python scripts/profile_graph_sweep.py [probe ...]
+The cache is cleared BEFORE each attempt, so every attempt starts from
+an empty CacheManager; ``cache_empty`` after the action shows whether
+the probe itself leaks a persisted frame.
+
+Usage: SPARK_GRAFT_SF_DIR=path/to/sf0.1 \
+    python scripts/profile_graph_sweep.py [probe ...]
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ def main():
     spark = get_spark("profile-graph-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     st = spark.sparkContext.statusTracker()
+    cache = spark._jsparkSession.sharedState().cacheManager()
     for name in names:
         for attempt in ("cold", "warm"):
             spark.catalog.clearCache()
@@ -36,7 +42,8 @@ def main():
             jobs = [j for j in (st.getJobIdsForGroup() or []) if j > j0]
             print(f"{name} [{attempt}]: construct={t1-t0:.2f}s "
                   f"action={t2-t1:.2f}s total={t2-t0:.2f}s "
-                  f"jobs={len(jobs)}")
+                  f"jobs={len(jobs)} cache_empty={cache.isEmpty()}",
+                  flush=True)
 
 
 if __name__ == "__main__":

@@ -858,8 +858,10 @@ class TestKCore:
     def test_max_rounds_raises_instead_of_returning_non_core(self, spark):
         import pytest as _pytest
         path = [(i, i + 1) for i in range(10)]
+        spark.catalog.clearCache()
         with _pytest.raises(RuntimeError, match="max_rounds"):
             self._core(spark, path, k=2, max_rounds=2)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_min_degree_invariant(self, spark):
         # every survivor's degree within the core is >= k (the k-core

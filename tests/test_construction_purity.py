@@ -56,14 +56,13 @@ EXEMPT_PROBES = {
     "dedup_survivorship",  # composes dedup_clusters' CC fixpoint loop
     "graph_pagerank_iter",  # integer-grid power method: the one
                           # bounded n = base.count() sizes the exact
-                          # teleport term, and the per-round lazy
-                          # localCheckpoint still registers jobs at
-                          # first use (operators/graph.py:
-                          # pagerank_integer — graph_pagerank's twin)
-    "graph_hits_iter",    # integer-grid HITS: same per-round lazy
-                          # localCheckpoint family — under AQE,
-                          # planning the checkpoint RDD executes the
-                          # round's query stages at construction
+                          # teleport term, and each round's eager
+                          # localCheckpoint observes the dangling sum
+                          # (operators/graph.py:pagerank_integer —
+                          # graph_pagerank's twin)
+    "graph_hits_iter",    # integer-grid HITS: each half-step's eager
+                          # localCheckpoint observes the raw total the
+                          # next half-step normalizes by
                           # (operators/graph.py:hits_integer)
 }
 
