@@ -64,9 +64,10 @@ def incremental_ingest(spark: SparkSession, source: DataFrame, dest: str,
 
     # 1. data lands... (aligned onto the hourly keys: an ingest window
     # spans many hours while the source scan's partitioning is
-    # arbitrary — without the rebalance every scan task writes a file
-    # into every hour it holds, and a 1-partition source serializes
-    # the whole layout on one task; see sink.write_partitioned)
+    # arbitrary — unclustered, every scan task writes a file into every
+    # hour it holds, and a 1-partition source serializes the whole
+    # layout on one task; clustered, a small window's hours spread over
+    # the cores, one file each; see sink.write_partitioned)
     write_partitioned(observed, dest, ts_col, fmt=fmt,
                       max_records_per_file=max_records_per_file,
                       align_partitions=True)

@@ -6,9 +6,10 @@ Spark-native re-expression of the reference's pull/push engines
 - Source: the paginated fetch runs driver-side (the API itself is the
   serial bottleneck, exactly as in the reference) but lands directly in
   a DataFrame; server-side time-window/order/limit params mirror the
-  reference's pushdown (:180-200). The page strings are unpickled in the
-  JVM and parsed by the JVM JSON reader, so neither schema inference nor
-  any later action over the landed frame starts a Python worker.
+  reference's pushdown (:180-200). The page strings land through Arrow
+  as a local relation and are parsed in the JVM, so neither schema
+  inference nor any later action over the landed frame starts a Python
+  worker, and the frame's plan carries a size estimate.
   Transport is injectable so tests and air-gapped runs use a fake; a
   real deployment passes a thin requests-based callable.
 - Sink: one HTTP call per record, executed per-partition via
@@ -25,7 +26,10 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Iterator
 
+import pyarrow as pa
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_json_string
 
 #: transport(params) -> envelope dict. Injectable for tests/offline runs.
 Transport = Callable[[dict], dict]
@@ -54,37 +58,53 @@ def rest_source(spark: SparkSession, transport: Transport,
         cursor = (envelope.get("meta") or {}).get("next") or None
         if not cursor:
             break
-    rdd = spark.sparkContext.parallelize(pages or ["{}"], numSlices=max(
-        1, len(pages) // 10_000 + 1))
-    # ``reader.json(rdd)`` would re-encode the strings in a Python-worker
-    # stage on every job over the frame (inference, then each action);
-    # SerDeUtil unpickles the parallelized batches in the JVM instead.
-    strings = spark._jvm.org.apache.spark.api.python.SerDeUtil.pythonToJava(
-        rdd._jrdd, True)
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = DataFrame(reader._jreader.json(strings), spark)
+    # The strings land through Arrow as a local relation: no job over
+    # the frame starts a Python worker (``reader.json(rdd)`` re-encodes
+    # the strings in one per job), and the plan carries a size estimate
+    # (rows x schema width) for the sink's hourly clustering. Above
+    # spark.sql.execution.arrow.localRelationThreshold they land as an
+    # RDD with an unknown estimate, as a frame parsed by ``reader.json``
+    # always is; so the reader only infers the schema, and ``from_json``
+    # parses.
+    strings = spark.createDataFrame(pa.table(
+        {"value": pa.array(pages or ["{}"], pa.string())}))
+    if schema is None:
+        dataset = getattr(strings._jdf, "as")(
+            spark._jvm.org.apache.spark.sql.Encoders.STRING())
+        schema = _parse_datatype_json_string(
+            spark.read._jreader.json(dataset).schema().json())
+    df = strings.select(F.from_json("value", schema).alias("r")).select("r.*")
     return df.limit(0) if not pages else df
 
 
 def rest_sink(df: DataFrame, push: Transport, method: str = "POST",
-              max_failures: int = 3) -> None:
-    """Push each row as one request from the executors.
+              max_failures: int = 3) -> int:
+    """Push each row as one request from the executors; return the
+    number of records sent.
 
     ``push`` receives ``{"method": m, "payload": row-dict}`` per record
     (verb-from-config, ref :321). Each partition owns an error budget of
     ``max_failures`` (ref APIErrorMax) — exceeding it fails the task and
-    surfaces through normal Spark retry/abort semantics.
+    surfaces through normal Spark retry/abort semantics. The count is
+    taken on the push pass (an accumulator, which Spark applies once
+    per successful task of an action), so no second scan counts ``df``;
+    a record that failed within the budget counts as sent.
     """
+    sent = df.sparkSession.sparkContext.accumulator(0)
+
     def push_partition(rows: Iterator) -> None:
-        failures = 0
+        failures = n = 0
         for row in rows:
+            n += 1
             try:
                 push({"method": method, "payload": row.asDict(recursive=True)})
             except Exception:  # noqa: BLE001 — budget spans causes
                 failures += 1
                 if failures >= max_failures:
                     raise
+        sent.add(n)
     df.foreachPartition(push_partition)
+    return sent.value
 
 
 def rest_sink_receipts(df: DataFrame, push: Transport, key_col: str,

@@ -11,17 +11,23 @@ ingestion cap (util.py:51-57, grace factor 0.5). Spark-native form:
 - ``maxRecordsPerFile`` replaces the adaptive API-limit calculator: the
   writer splits files at a record cap instead of probing sizes;
 - empty inputs write no data files (ref skips empty pages, :257-258) —
-  Spark does this per-partition natively.
+  Spark does this per-partition natively;
+- a pull, an ingest window or a MERGE batch is small and spans many
+  hours, so nearly all of its write cost is per file. The production
+  writes cluster rows on the hour columns first (:func:`_clustered`):
+  each hour is one file, and the hours of a small batch spread over the
+  cores instead of one task writing them all in turn.
 
 At 100 TB: append-mode + dynamic partition overwrite keeps re-runs of a
-window idempotent per partition; writers scale with upstream parallelism
-(no coalesce(1) anti-pattern anywhere).
+window idempotent per partition; a large write keeps AQE's REBALANCE,
+which splits a hot hour across tasks (no coalesce(1) anti-pattern
+anywhere).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 PARTITION_COLS = ("year", "month", "day", "hour")
 #: directory value Hive writes for a NULL partition value
@@ -69,6 +75,42 @@ def partition_filter(df: DataFrame, pcols, parts) -> Column:
     return F.expr(f"struct({cols}) IN ({structs})")
 
 
+def _clustered(df: DataFrame, pcols) -> DataFrame:
+    """``df`` clustered on the partition columns ``pcols`` for a
+    partitioned write, so that each task writes its hours' files whole.
+
+    Without clustering every write task emits a file into every hour it
+    holds rows for: a low-parallelism input spanning many hours
+    serializes hundreds of per-directory writes on one task (a
+    1-partition 720-hour micro-batch measured 9-12 s against ~4 s
+    clustered), and a wide input fragments each hour into one file per
+    task. The cost of a small write is per file, not per byte, so the
+    rule sizes by the optimizer's estimate of ``df``:
+
+    - below ``defaultParallelism`` x
+      ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, a
+      hash ``repartition(defaultParallelism, *pcols)``: each hour stays
+      whole in one task and the hours spread over the cores. AQE would
+      coalesce a ``REBALANCE`` of that size to fewer tasks than cores,
+      and an hourly ingest or MERGE batch (tens of KB) to one task;
+    - otherwise the AQE ``REBALANCE`` hint, which splits an oversized
+      hot hour across tasks (``maxRecordsPerFile`` then caps the files)
+      and coalesces tiny hours together. An unknown estimate (an RDD
+      source reports ``Long.MaxValue``) lands here too.
+
+    The rule reads confs and writes none.
+    """
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size < n * floor:
+        return df.repartition(n, *pcols)
+    return df.hint("rebalance", *pcols)
+
+
 def write_partitioned(df: DataFrame, path: str, ts_col: str,
                       fmt: str = "parquet",
                       max_records_per_file: int = 100_000,
@@ -76,25 +118,20 @@ def write_partitioned(df: DataFrame, path: str, ts_col: str,
                       align_partitions: bool = False) -> None:
     """Write hourly-partitioned, record-capped files under ``path``.
 
-    ``align_partitions=True`` shuffles rows onto the hourly partition
-    keys (AQE ``REBALANCE`` hint) before the write. Without it, EVERY
-    write task emits a file into EVERY hour it holds rows for — a
-    low-parallelism input spanning many hours serializes hundreds of
-    per-directory writes on one task (a 1-partition 720-hour
-    micro-batch measured 9-12 s vs ~4 s aligned), and a wide input
-    fragments each hour into one file per task. REBALANCE (not a plain
-    hash repartition) keeps the write scale-safe in both directions:
-    AQE splits an oversized hot hour across tasks (maxRecordsPerFile
-    then caps the files) and coalesces tiny hours together. Default
-    off: the plain form preserves upstream partitioning for callers
-    whose batches already span few hours — the direct probe and test
-    writes; the production ingest paths
-    (etl/ingest.py:incremental_ingest, job.py's REST pull, the
-    versioned streaming sink) all pass ``align_partitions=True``.
+    ``align_partitions=True`` clusters rows on the hourly partition
+    keys before the write (:func:`_clustered`: a hash repartition over
+    the cores for a small frame, the AQE ``REBALANCE`` hint for a large
+    or unsized one), so each hour is written as one file per task that
+    holds it instead of one per upstream task. Default off: the plain
+    form preserves upstream partitioning for callers whose batches
+    already span few hours — the direct probe and test writes; the
+    production ingest paths (etl/ingest.py:incremental_ingest, job.py's
+    REST pull, the versioned streaming sink) all pass
+    ``align_partitions=True``.
     """
     out = with_time_partitions(df, ts_col)
     if align_partitions:
-        out = out.hint("rebalance", *PARTITION_COLS)
+        out = _clustered(out, PARTITION_COLS)
     (out
      .write.mode(mode)
      .option("maxRecordsPerFile", max_records_per_file)
@@ -132,26 +169,29 @@ def replace_partitions(df: DataFrame, path: str, pcols,
     The write is a DYNAMIC partition overwrite requested on the writer
     itself (``partitionOverwriteMode`` option), so the session conf is
     never written and no other query in the session sees a temporary
-    mode. Dynamic overwrite never touches a partition absent from the
-    output, so each of ``affected`` (value tuples in ``pcols`` order)
-    that got no rows — every row superseded into another hour, or
-    deleted — would keep its stale files. Those directories are removed
-    through the Hadoop FS API: on an object store a stale partition left
-    visible is, for the GDPR delete path, a compliance failure.
+    mode. Rows are clustered on ``pcols`` first (:func:`_clustered`),
+    so each partition is rewritten as one file per task that holds it
+    and a small rewrite spreads its partitions over the cores. Dynamic
+    overwrite never touches a partition absent from the output, so each
+    of ``affected`` (value tuples in ``pcols`` order) that got no rows —
+    every row superseded into another hour, or deleted — would keep its
+    stale files. Those directories are removed through the Hadoop FS
+    API: on an object store a stale partition left visible is, for the
+    GDPR delete path, a compliance failure.
 
     ``df`` must not read from ``path``: Spark refuses to overwrite a
     path its write plan still reads, so callers localCheckpoint the
     slice they read back. Returns ``(written, purged)``: the partitions
-    ``df`` wrote (computed only when ``affected`` is given) and the
-    number of affected directories removed.
+    ``df`` wrote, observed on the write pass itself, and the number of
+    affected directories removed.
     """
-    (df.write.mode("overwrite")
+    obs = Observation()
+    observed = df.observe(obs, F.collect_set(F.struct(*pcols)).alias("p"))
+    (_clustered(observed, pcols).write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .option("maxRecordsPerFile", max_records_per_file)
      .partitionBy(*pcols).format(fmt).save(path))
-    if not affected:
-        return set(), 0
-    written = {tuple(r) for r in df.select(*pcols).distinct().collect()}
+    written = {tuple(r) for r in obs.get["p"]}
     purged = 0
     for t in set(affected) - written:
         sub = "/".join(f"{c}={NULL_PARTITION if v is None else v}"
@@ -181,10 +221,10 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     2. only fragmented partitions are read back — the filter is one
        :func:`partition_filter` over their values, which
        PruneFileSourcePartitions folds into a directory prune;
-    3. the slice is repartitioned BY the partition columns (without
-       this every write task holding rows of an hour emits its own
-       file there, reproducing the fragmentation) and rewritten by
-       :func:`replace_partitions`, which replaces exactly the
+    3. the slice is rewritten by :func:`replace_partitions`, which
+       clusters it on the partition columns (without that every write
+       task holding rows of an hour would emit its own file there,
+       reproducing the fragmentation) and replaces exactly the
        partitions present in the output;
     4. row content is untouched — compaction is a physical-layout
        operation; a read-back must equal the pre-compaction table.
@@ -228,7 +268,6 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     # still reads; materializing the (fragmentation-bounded) slice
     # truncates lineage back to the source files (merge.py rule).
     slice_ = (df.filter(partition_filter(df, pcols, parts))
-              .repartition(*[F.col(c) for c in pcols])
               .localCheckpoint(eager=True))
 
     # compaction keeps every row, so no partition empties out and none

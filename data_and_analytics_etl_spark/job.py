@@ -34,7 +34,7 @@ from .etl.checkpoint import CheckpointManifest
 from .etl.errors import ErrorBudget, ErrorBudgetExceeded
 from .etl.ingest import normalize_timestamp
 from .etl.rest import Transport, rest_sink, rest_source
-from .etl.sink import write_partitioned
+from .etl.sink import path_exists, write_partitioned
 
 #: The reference's constants (lambda_function.py:59; CommCareAPIHandler.py:68,24).
 REQUEST_LIMIT = 1000
@@ -163,7 +163,8 @@ def _pull(spark: SparkSession, event: dict, transport: Transport,
             obs = Observation(f"pull_{name}")
             observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
             # aligned: REST pages arrive partitioned by window slice,
-            # not by hour — see sink.write_partitioned(align_partitions)
+            # not by hour, so the write clusters them on the hour keys —
+            # see sink.write_partitioned(align_partitions)
             write_partitioned(observed, dest, "indexed_on_ts",
                               align_partitions=True)
             n = int(obs.get["rows"])
@@ -189,12 +190,12 @@ def _push(spark: SparkSession, event: dict, transport: Transport,
     results: dict[str, int] = {}
     for specifier, cfg in event["specifiers"].items():
         src = os.path.join(data_root, domain, "payload", specifier)
-        if not os.path.isdir(src):
+        # through the Hadoop FS, so a file:// or object-store root counts
+        if not path_exists(spark, src):
             results[specifier] = 0  # missing prefix = clean no-op (A12)
             continue
-        df = spark.read.json(src)
-        rest_sink(df, transport, method=cfg.get("method", "POST"),
-                  max_failures=ERROR_BUDGET)
-        results[specifier] = df.count()
+        results[specifier] = rest_sink(
+            spark.read.json(src), transport,
+            method=cfg.get("method", "POST"), max_failures=ERROR_BUDGET)
     return {"statusCode": 200, "operation": "s3_to_cc",
             "domain": domain, "pushed": results}

@@ -71,6 +71,25 @@ STARTUP_CONF: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
                                           default_driver_memory()),
     "spark.ui.enabled": "false",
+    # The engine's own store is ``file:`` (get_spark only builds a
+    # ``local[n]`` master). Hadoop's default for it is the checksummed
+    # LocalFileSystem, which writes a ``.crc`` sidecar next to every
+    # file. The pyspark wheel ships no libhadoop, so the local FS sets
+    # the permission of each file and directory it creates with a
+    # forked ``chmod``, and a sidecar is one more fork per file. Over 20
+    # single-task 48-hour writes (960 data files, 4-core host), JFR
+    # ``jdk.ProcessStart`` counted 3,101 forks on the checksummed FS
+    # (3.2 per file, 980 of them for sidecars) and 2,121 on the raw FS
+    # (2.2 per file). What is traded: parquet keeps its own page CRCs
+    # (``parquet.page.write-checksum.enabled`` defaults to true in the
+    # bundled parquet-mr 1.16.0; a reader checks them when
+    # ``parquet.page.verify-checksum.enabled`` is set), but JSON and
+    # other text outputs lose the sidecar check on read. Object stores
+    # never had sidecars. The second key covers ``FileContext`` users,
+    # the streaming checkpoint among them.
+    "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "org.apache.hadoop.fs.local.RawLocalFs",
 }
 
 
@@ -91,7 +110,11 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "data-and-analytics-etl-spark",
               cpus: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """Build (or fetch) the engine session with the full conf profile."""
+    """Build (or fetch) the engine session with the full conf profile.
+
+    ``extra_conf`` is applied last, so its values win over the profile's.
+    The builder sets every runtime conf on a session it fetches as well
+    as on one it builds, so no conf is applied after it."""
     n = cpus or default_parallelism()
     b = SparkSession.builder.master(f"local[{n}]").appName(app_name)
     conf = dict(STARTUP_CONF)
@@ -99,5 +122,4 @@ def get_spark(app_name: str = "data-and-analytics-etl-spark",
     conf.update(extra_conf or {})
     for k, v in conf.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
-    return apply_runtime_conf(spark)
+    return b.getOrCreate()

@@ -23,6 +23,9 @@ from data_and_analytics_etl_spark.etl import (CheckpointManifest, ErrorBudget,
                                               normalize_timestamp,
                                               write_partitioned)
 from data_and_analytics_etl_spark.etl.rest import rest_sink, rest_source
+from data_and_analytics_etl_spark.etl.sink import (PARTITION_COLS,
+                                                   _clustered,
+                                                   with_time_partitions)
 from data_and_analytics_etl_spark.operators.dedup import keyed_dedup
 
 T1 = dt.datetime(2024, 1, 10)
@@ -69,7 +72,7 @@ def test_partitioned_sink_layout_and_record_cap(spark, sf_dir, tmp_path):
 def test_aligned_write_same_rows_one_file_per_hour(spark, sf_dir,
                                                    tmp_path):
     # align_partitions=True (r13: the versioned streaming sink's write
-    # path) rebalances onto the hourly keys before the write — the
+    # path) clusters rows on the hourly keys before the write — the
     # rows and the hive layout must be identical to the plain form,
     # and a 1-partition input spanning many hours must come out as one
     # file per hour (not one task serially writing every directory).
@@ -81,24 +84,202 @@ def test_aligned_write_same_rows_one_file_per_hour(spark, sf_dir,
     hours = glob.glob(f"{aligned}/year=*/month=*/day=*/hour=*")
     assert hours, "expected hive-style layout from the aligned write"
     files = glob.glob(f"{aligned}/year=*/month=*/day=*/hour=*/*.parquet")
-    # A second file in an hour comes from AQE's REBALANCE advisory
-    # split: when the shuffle partition holding an hour's rows outgrows
-    # spark.sql.adaptive.advisoryPartitionSizeInBytes, AQE splits it
-    # across tasks, and each of those tasks writes its own file into
-    # that hour. Any other source of extra files (one file per upstream
-    # task x hour) is the fragmentation the aligned write exists to
-    # stop, so the total stays bounded at two files per hour ...
-    assert len(files) <= 2 * len(hours), \
-        f"aligned write fragmented hours: {len(files)} files over " \
-        f"{len(hours)} hours"
-    # ... and the split is the exception: most hours hold exactly one.
     single = sum(1 for h in hours
                  if len(glob.glob(f"{h}/*.parquet")) == 1)
-    assert single > len(hours) / 2, \
-        f"only {single} of {len(hours)} hours hold a single file"
+    if _plan_origin(_clustered(with_time_partitions(ev, "ts"),
+                               PARTITION_COLS)) == "REPARTITION_BY_NUM":
+        # the spread path: each hour is whole in one hash partition
+        assert single == len(hours) == len(files), \
+            f"{len(files)} files over {len(hours)} hours"
+    else:
+        # A second file in an hour comes from AQE's REBALANCE advisory
+        # split: when the shuffle partition holding an hour's rows
+        # outgrows spark.sql.adaptive.advisoryPartitionSizeInBytes, AQE
+        # splits it across tasks, and each of those tasks writes its
+        # own file into that hour. Any other source of extra files (one
+        # file per upstream task x hour) is the fragmentation the
+        # aligned write exists to stop, so the total stays bounded at
+        # two files per hour ...
+        assert len(files) <= 2 * len(hours), \
+            f"aligned write fragmented hours: {len(files)} files over " \
+            f"{len(hours)} hours"
+        # ... and the split is the exception: most hours hold exactly
+        # one.
+        assert single > len(hours) / 2, \
+            f"only {single} of {len(hours)} hours hold a single file"
     a = sorted(map(tuple, spark.read.parquet(aligned).collect()))
     p = sorted(map(tuple, spark.read.parquet(plain).collect()))
     assert a == p
+
+
+def _plan_origin(df) -> str:
+    """The shuffle origin of the clustering exchange in ``df``'s
+    physical plan (no job runs)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    origins = [o for o in ("REPARTITION_BY_NUM",
+                           "REBALANCE_PARTITIONS_BY_COL") if o in plan]
+    assert len(origins) == 1, plan
+    return origins[0]
+
+
+def _last_stage_tasks(spark, call) -> int:
+    """Run ``call`` in its own job group; return the task count of the
+    last stage it ran — the write stage of a partitioned write."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"write-tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds}
+    return tracker.getStageInfo(max(stages)).numTasks
+
+
+class TestClusteredWrite:
+    """The aligned write and ``replace_partitions`` cluster rows on the
+    hour columns. A frame whose size estimate is below
+    defaultParallelism x minPartitionSize spreads its hours over the
+    cores (hash repartition, one file per hour); a larger or unsized
+    frame keeps AQE's REBALANCE."""
+
+    BASE = dt.datetime(2024, 1, 1)
+
+    @classmethod
+    def _frame(cls, spark, hours, value=None):
+        # two rows an hour; a Range source, so the estimate is known
+        v = F.col("id").cast("double") if value is None else F.lit(value)
+        return spark.range(2 * hours).select(
+            F.col("id").alias("event_id"),
+            (F.lit(cls.BASE) + F.make_dt_interval(
+                mins=(F.col("id") * 30).cast("int"))).alias("ts"),
+            v.alias("value")).coalesce(1)
+
+    @staticmethod
+    def _files_per_hour(dest):
+        return [len(glob.glob(f"{h}/*.parquet")) for h in
+                glob.glob(f"{dest}/year=*/month=*/day=*/hour=*")]
+
+    def test_small_aligned_write_spreads_hours(self, spark, tmp_path):
+        n = spark.sparkContext.defaultParallelism
+        hours = max(24, 2 * n)
+        df = self._frame(spark, hours)
+        dest = str(tmp_path / "t")
+        tasks = _last_stage_tasks(spark, lambda: write_partitioned(
+            df, dest, "ts", align_partitions=True))
+        assert tasks == min(n, hours)
+        assert self._files_per_hour(dest) == [1] * hours
+        assert sorted(map(tuple, spark.read.parquet(dest).select(
+            "event_id", "ts", "value").collect())) \
+            == sorted(map(tuple, df.collect()))
+
+    def test_small_merge_spreads_hours(self, spark, tmp_path):
+        from data_and_analytics_etl_spark.etl.merge import \
+            merge_upsert_partitioned
+        n = spark.sparkContext.defaultParallelism
+        hours = max(24, 2 * n)
+        dest = str(tmp_path / "t")
+        write_partitioned(self._frame(spark, hours), dest, "ts")
+        # every key updated in place: every hour is rewritten
+        updates = self._frame(spark, hours, value=-1.0)
+        stats = {}
+        tasks = _last_stage_tasks(spark, lambda: stats.update(
+            merge_upsert_partitioned(spark, dest, updates,
+                                     keys=["event_id"], ts_col="ts")))
+        assert stats == {"affected_partitions": hours,
+                         "rewritten": hours, "purged": 0}
+        assert tasks == min(n, hours)
+        assert self._files_per_hour(dest) == [1] * hours
+        back = spark.read.parquet(dest)
+        assert back.count() == 2 * hours
+        assert {r.value for r in back.select("value").collect()} == {-1.0}
+
+    def test_large_or_unsized_frame_keeps_rebalance(self, spark):
+        def origin(df):
+            return _plan_origin(_clustered(with_time_partitions(df, "ts"),
+                                           PARTITION_COLS))
+        small = self._frame(spark, 24)
+        # a billion-row Range: an 8+ GB estimate, and nothing runs
+        large = spark.range(10 ** 9).select(
+            F.col("id").alias("event_id"),
+            F.lit(self.BASE).alias("ts"))
+        # an RDD-backed frame reports Spark's unknown estimate
+        unsized = spark.createDataFrame([(1, self.BASE)],
+                                        "event_id long, ts timestamp")
+        assert origin(small) == "REPARTITION_BY_NUM"
+        assert origin(large) == "REBALANCE_PARTITIONS_BY_COL"
+        assert origin(unsized) == "REBALANCE_PARTITIONS_BY_COL"
+
+    def test_write_leaves_no_crc_files(self, spark, tmp_path):
+        dest = str(tmp_path / "t")
+        write_partitioned(self._frame(spark, 6), dest, "ts",
+                          align_partitions=True)
+        assert glob.glob(f"{dest}/**/*.parquet", recursive=True)
+        assert glob.glob(f"{dest}/**/.*.crc", recursive=True) == []
+
+    def test_replace_partitions_runs_no_job_after_the_write(self, spark,
+                                                           tmp_path):
+        # the written partitions are observed on the write pass, so
+        # passing ``affected`` costs no job
+        from data_and_analytics_etl_spark.etl.sink import \
+            replace_partitions
+        sc = spark.sparkContext
+        df = with_time_partitions(self._frame(spark, 6), "ts")
+        pcols = list(PARTITION_COLS)
+        jobs, written = [], []
+        for i, affected in enumerate([(), {(2023, 12, 31, 23)}]):
+            group = f"replace-{i}-{tmp_path.name}"
+            sc.setJobGroup(group, group)
+            try:
+                written.append(replace_partitions(
+                    df, str(tmp_path / f"t{i}"), pcols, affected))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert jobs[0] == jobs[1], jobs
+        hours = {(2024, 1, 1, h) for h in range(6)}
+        assert written == [(hours, 0), (hours, 0)]
+
+    def test_checksummed_table_merges_and_compacts(self, spark, tmp_path):
+        # a table first written through Hadoop's checksummed local FS
+        # (a .crc sidecar per file), as every table was before the
+        # engine switched its local store to the raw FS
+        from data_and_analytics_etl_spark.etl.merge import \
+            merge_upsert_partitioned
+        from data_and_analytics_etl_spark.etl.sink import \
+            compact_partitions
+        dest = str(tmp_path / "t")
+        hours = 12
+        base = self._frame(spark, hours)
+        for i in range(2):  # two files in every hour
+            (with_time_partitions(base.filter(F.col("event_id") % 2 == i),
+                                  "ts")
+             .write.mode("append")
+             .option("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+             .option("fs.file.impl.disable.cache", "true")
+             .partitionBy("year", "month", "day", "hour").parquet(dest))
+        assert len(glob.glob(f"{dest}/**/.*.parquet.crc",
+                             recursive=True)) == 2 * hours
+        # update the first half of the hours, then compact the rest
+        updates = base.filter(F.col("event_id") < hours) \
+            .withColumn("value", F.lit(-1.0))
+        stats = merge_upsert_partitioned(spark, dest, updates,
+                                         keys=["event_id"], ts_col="ts")
+        assert stats["rewritten"] == hours // 2
+        res = compact_partitions(spark, dest, min_files=2)
+        assert res["compacted"] == hours // 2
+        assert self._files_per_hour(dest) == [1] * hours
+        want = {(r.event_id, -1.0 if r.event_id < hours else r.value)
+                for r in base.collect()}
+        got = {(r.event_id, r.value) for r in
+               spark.read.parquet(dest).select("event_id", "value")
+               .collect()}
+        assert got == want
 
 
 def test_empty_input_writes_no_data_files(spark, sf_dir, tmp_path):
@@ -238,6 +419,16 @@ class TestRest:
         # an RDD of class PythonRDD is a Python-worker stage (the
         # driver's own parallelize is read "at PythonRDD.scala")
         assert "PythonRDD[" not in lineage, lineage
+
+    def test_source_plan_is_sized(self, spark):
+        # the landed frame carries a size estimate, so the aligned write
+        # of a small pull spreads its hours over the cores; an
+        # RDD-backed frame's unknown estimate would keep REBALANCE
+        df = rest_source(spark, self._transport(self.PAGES))
+        hourly = with_time_partitions(df.withColumn(
+            "ts", normalize_timestamp(F.col("indexed_on"))), "ts")
+        assert _plan_origin(_clustered(hourly, PARTITION_COLS)) \
+            == "REPARTITION_BY_NUM"
 
     def test_sink_pushes_every_row(self, spark, tmp_path):
         marker = str(tmp_path / "pushed")

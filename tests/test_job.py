@@ -146,6 +146,30 @@ class TestPush:
         assert out["statusCode"] == 200 and out["pushed"]["spec1"] == 7
         assert len(os.listdir(seen)) == 7
 
+    def test_push_from_file_uri_root(self, spark, tmp_path):
+        # a file:// data root: the prefix check goes through the Hadoop
+        # FS, so the records are pushed (os.path.isdir saw no prefix)
+        src = tmp_path / "dom" / "payload" / "spec1"
+        os.makedirs(src)
+        with open(src / "part.json", "w") as f:
+            for i in range(5):
+                f.write(json.dumps({"form_id": f"f{i}"}) + "\n")
+        seen = str(tmp_path / "seen")
+        os.makedirs(seen)
+
+        def push(req):
+            with open(os.path.join(seen, req["payload"]["form_id"]),
+                      "w") as f:
+                f.write("1")
+        event = {"domain": "dom", "operation_type": "s3_to_cc",
+                 "specifiers": {"spec1": {"method": "POST"},
+                                "ghost": {"method": "POST"}}}
+        out = handle_event(spark, event, transport=push,
+                           data_root=tmp_path.as_uri())
+        assert out["statusCode"] == 200
+        assert out["pushed"] == {"spec1": 5, "ghost": 0}
+        assert sorted(os.listdir(seen)) == [f"f{i}" for i in range(5)]
+
     def test_missing_prefix_is_clean_noop(self, spark, tmp_path):
         event = {"domain": "dom", "operation_type": "s3_to_cc",
                  "specifiers": {"ghost": {"method": "POST"}}}

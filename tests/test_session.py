@@ -30,3 +30,18 @@ def test_default_driver_memory_fits_physical_memory(monkeypatch, phys_gb):
     heap_mb = int(heap[:-1])
     assert 0 < heap_mb <= _phys_mb() // 2
     assert heap_mb <= 32 * 1024
+
+
+def test_get_spark_keeps_extra_conf(spark):
+    # extra_conf is applied after the profile: a caller asking for
+    # another shuffle width gets it, not the profile's 32
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        s = session.get_spark("daa-etl-spark-tests",
+                              extra_conf={key: "2000"})
+        assert s.conf.get(key) == "2000"
+    finally:
+        spark.conf.set(key, before)
+    assert session.get_spark("daa-etl-spark-tests").conf.get(key) \
+        == session.RUNTIME_CONF[key]
