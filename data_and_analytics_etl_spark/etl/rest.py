@@ -29,7 +29,6 @@ from collections.abc import Callable, Iterator
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import _parse_datatype_json_string
 
 #: transport(params) -> envelope dict. Injectable for tests/offline runs.
 Transport = Callable[[dict], dict]
@@ -71,8 +70,7 @@ def rest_source(spark: SparkSession, transport: Transport,
     if schema is None:
         dataset = getattr(strings._jdf, "as")(
             spark._jvm.org.apache.spark.sql.Encoders.STRING())
-        schema = _parse_datatype_json_string(
-            spark.read._jreader.json(dataset).schema().json())
+        schema = DataFrame(spark.read._jreader.json(dataset), spark).schema
     df = strings.select(F.from_json("value", schema).alias("r")).select("r.*")
     return df.limit(0) if not pages else df
 

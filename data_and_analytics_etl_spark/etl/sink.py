@@ -19,8 +19,9 @@ ingestion cap (util.py:51-57, grace factor 0.5). Spark-native form:
   cores instead of one task writing them all in turn.
 
 At 100 TB: append-mode + dynamic partition overwrite keeps re-runs of a
-window idempotent per partition; a large write keeps AQE's REBALANCE,
-which splits a hot hour across tasks (no coalesce(1) anti-pattern
+window idempotent per partition; a large aligned write keeps AQE's
+REBALANCE, which splits a hot hour across tasks, and a large partition
+replace keeps the layout its caller chose (no coalesce(1) anti-pattern
 anywhere).
 """
 
@@ -75,7 +76,7 @@ def partition_filter(df: DataFrame, pcols, parts) -> Column:
     return F.expr(f"struct({cols}) IN ({structs})")
 
 
-def _clustered(df: DataFrame, pcols) -> DataFrame:
+def _clustered(df: DataFrame, pcols, rebalance: bool = True) -> DataFrame:
     """``df`` clustered on the partition columns ``pcols`` for a
     partitioned write, so that each task writes its hours' files whole.
 
@@ -98,6 +99,13 @@ def _clustered(df: DataFrame, pcols) -> DataFrame:
       and coalesces tiny hours together. An unknown estimate (an RDD
       source reports ``Long.MaxValue``) lands here too.
 
+    ``rebalance=False`` (:func:`replace_partitions`) leaves a large
+    frame as its caller laid it out. Compaction hash-clusters its slice
+    before the checkpoint, so each hour stays whole in one task; a
+    REBALANCE would let AQE split a large hour into several files, which
+    the next compaction would rewrite again. A large MERGE or DELETE
+    slice is written as its checkpoint holds it, with no added shuffle.
+
     The rule reads confs and writes none.
     """
     spark = df.sparkSession
@@ -108,7 +116,7 @@ def _clustered(df: DataFrame, pcols) -> DataFrame:
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if size < n * floor:
         return df.repartition(n, *pcols)
-    return df.hint("rebalance", *pcols)
+    return df.hint("rebalance", *pcols) if rebalance else df
 
 
 def write_partitioned(df: DataFrame, path: str, ts_col: str,
@@ -169,28 +177,34 @@ def replace_partitions(df: DataFrame, path: str, pcols,
     The write is a DYNAMIC partition overwrite requested on the writer
     itself (``partitionOverwriteMode`` option), so the session conf is
     never written and no other query in the session sees a temporary
-    mode. Rows are clustered on ``pcols`` first (:func:`_clustered`),
-    so each partition is rewritten as one file per task that holds it
-    and a small rewrite spreads its partitions over the cores. Dynamic
-    overwrite never touches a partition absent from the output, so each
-    of ``affected`` (value tuples in ``pcols`` order) that got no rows —
-    every row superseded into another hour, or deleted — would keep its
-    stale files. Those directories are removed through the Hadoop FS
-    API: on an object store a stale partition left visible is, for the
-    GDPR delete path, a compliance failure.
+    mode. A small ``df`` is hash-clustered on ``pcols`` first
+    (:func:`_clustered`), so each partition is rewritten as one file and
+    the partitions spread over the cores; a large one is written as the
+    caller laid it out. Dynamic overwrite never touches a partition
+    absent from the output, so each of ``affected`` (value tuples in
+    ``pcols`` order) that got no rows — every row superseded into
+    another hour, or deleted — would keep its stale files. Those
+    directories are removed through the Hadoop FS API: on an object
+    store a stale partition left visible is, for the GDPR delete path,
+    a compliance failure.
 
     ``df`` must not read from ``path``: Spark refuses to overwrite a
     path its write plan still reads, so callers localCheckpoint the
     slice they read back. Returns ``(written, purged)``: the partitions
-    ``df`` wrote, observed on the write pass itself, and the number of
-    affected directories removed.
+    ``df`` wrote and the number of affected directories removed.
+    ``written`` is observed on the write pass itself, and only when
+    ``affected`` is given: the observation costs a set insert per row,
+    which compaction, passing none, does not pay.
     """
-    obs = Observation()
-    observed = df.observe(obs, F.collect_set(F.struct(*pcols)).alias("p"))
-    (_clustered(observed, pcols).write.mode("overwrite")
+    if affected:
+        obs = Observation()
+        df = df.observe(obs, F.collect_set(F.struct(*pcols)).alias("p"))
+    (_clustered(df, pcols, rebalance=False).write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .option("maxRecordsPerFile", max_records_per_file)
      .partitionBy(*pcols).format(fmt).save(path))
+    if not affected:
+        return set(), 0
     written = {tuple(r) for r in obs.get["p"]}
     purged = 0
     for t in set(affected) - written:
@@ -221,10 +235,10 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     2. only fragmented partitions are read back — the filter is one
        :func:`partition_filter` over their values, which
        PruneFileSourcePartitions folds into a directory prune;
-    3. the slice is rewritten by :func:`replace_partitions`, which
-       clusters it on the partition columns (without that every write
-       task holding rows of an hour would emit its own file there,
-       reproducing the fragmentation) and replaces exactly the
+    3. the slice is repartitioned BY the partition columns (without
+       this every write task holding rows of an hour emits its own
+       file there, reproducing the fragmentation) and rewritten by
+       :func:`replace_partitions`, which replaces exactly the
        partitions present in the output;
     4. row content is untouched — compaction is a physical-layout
        operation; a read-back must equal the pre-compaction table.
@@ -268,6 +282,7 @@ def compact_partitions(spark, path: str, fmt: str = "parquet",
     # still reads; materializing the (fragmentation-bounded) slice
     # truncates lineage back to the source files (merge.py rule).
     slice_ = (df.filter(partition_filter(df, pcols, parts))
+              .repartition(*[F.col(c) for c in pcols])
               .localCheckpoint(eager=True))
 
     # compaction keeps every row, so no partition empties out and none

@@ -122,20 +122,26 @@ def _plan_origin(df) -> str:
     return origins[0]
 
 
-def _last_stage_tasks(spark, call) -> int:
-    """Run ``call`` in its own job group; return the task count of the
-    last stage it ran — the write stage of a partitioned write."""
+def _group_jobs(spark, call) -> list:
+    """Run ``call`` in its own job group; return the ids of the jobs it
+    ran."""
     import uuid
     sc = spark.sparkContext
-    group = f"write-tasks-{uuid.uuid4().hex}"
+    group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    stages = {s for j in tracker.getJobIdsForGroup(group)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _last_stage_tasks(spark, call) -> int:
+    """Run ``call`` in its own job group; return the task count of the
+    last stage it ran — the write stage of a partitioned write."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in _group_jobs(spark, call)
               for s in tracker.getJobInfo(j).stageIds}
     return tracker.getStageInfo(max(stages)).numTasks
 
@@ -144,8 +150,9 @@ class TestClusteredWrite:
     """The aligned write and ``replace_partitions`` cluster rows on the
     hour columns. A frame whose size estimate is below
     defaultParallelism x minPartitionSize spreads its hours over the
-    cores (hash repartition, one file per hour); a larger or unsized
-    frame keeps AQE's REBALANCE."""
+    cores (hash repartition, one file per hour). Above it the aligned
+    write keeps AQE's REBALANCE, and ``replace_partitions`` writes the
+    frame as its caller laid it out."""
 
     BASE = dt.datetime(2024, 1, 1)
 
@@ -227,23 +234,16 @@ class TestClusteredWrite:
         # passing ``affected`` costs no job
         from data_and_analytics_etl_spark.etl.sink import \
             replace_partitions
-        sc = spark.sparkContext
         df = with_time_partitions(self._frame(spark, 6), "ts")
         pcols = list(PARTITION_COLS)
         jobs, written = [], []
         for i, affected in enumerate([(), {(2023, 12, 31, 23)}]):
-            group = f"replace-{i}-{tmp_path.name}"
-            sc.setJobGroup(group, group)
-            try:
-                written.append(replace_partitions(
-                    df, str(tmp_path / f"t{i}"), pcols, affected))
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            jobs.append(len(_group_jobs(spark, lambda: written.append(
+                replace_partitions(df, str(tmp_path / f"t{i}"), pcols,
+                                   affected)))))
         assert jobs[0] == jobs[1], jobs
         hours = {(2024, 1, 1, h) for h in range(6)}
-        assert written == [(hours, 0), (hours, 0)]
+        assert written == [(set(), 0), (hours, 0)]
 
     def test_checksummed_table_merges_and_compacts(self, spark, tmp_path):
         # a table first written through Hadoop's checksummed local FS
@@ -280,6 +280,46 @@ class TestClusteredWrite:
                spark.read.parquet(dest).select("event_id", "value")
                .collect()}
         assert got == want
+
+    def test_large_compaction_leaves_one_file_per_hour(self, spark,
+                                                       tmp_path):
+        # The large side of the rule, forced by a 1-byte
+        # minPartitionSize. A 1 KB advisory size makes AQE split any
+        # REBALANCE of the slice across tasks, one file per task in an
+        # hour; compaction must still leave each hour whole.
+        from data_and_analytics_etl_spark.etl.sink import \
+            compact_partitions
+        dest = str(tmp_path / "t")
+        hours, rows = 4, 400
+        base = spark.range(rows).select(
+            F.col("id").alias("event_id"),
+            (F.lit(self.BASE) + F.make_dt_interval(
+                hours=(F.col("id") % hours).cast("int"))).alias("ts"),
+            F.col("id").cast("double").alias("value"))
+        for i in range(4):  # four files in every hour
+            write_partitioned(base.filter(
+                F.floor(F.col("event_id") / (rows // 4)) == i)
+                .coalesce(1), dest, "ts")
+        assert self._files_per_hour(dest) == [4] * hours
+        confs = {"spark.sql.adaptive.coalescePartitions.minPartitionSize":
+                 "1b",
+                 "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+        saved = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            assert _plan_origin(_clustered(
+                with_time_partitions(base, "ts"), PARTITION_COLS)) \
+                == "REBALANCE_PARTITIONS_BY_COL"
+            res = compact_partitions(spark, dest, min_files=2)
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+        assert res["compacted"] == hours
+        assert self._files_per_hour(dest) == [1] * hours
+        assert sorted(map(tuple, spark.read.parquet(dest).select(
+            "event_id", "ts", "value").collect())) \
+            == sorted(map(tuple, base.collect()))
 
 
 def test_empty_input_writes_no_data_files(spark, sf_dir, tmp_path):
